@@ -519,7 +519,9 @@ def _simhash16_codes_kernel(pdfs):
     int(md5hex[:4], 16); hashlib md5 == JVM/DuckDB md5; the per-doc
     distinct token set is set(text.split(' ')) (empty tokens included,
     as on the JVM path); bit set iff the signed sum is positive
-    (2*ones > n) — integer compares, order-independent."""
+    (2*ones > n) — integer compares, order-independent. A NULL text
+    has no tokens, so its doc emits no row (the JVM path's
+    explode(split(NULL)) dropped it too)."""
     import hashlib
 
     import numpy as np
@@ -527,6 +529,7 @@ def _simhash16_codes_kernel(pdfs):
     bit_shifts = np.arange(15, -1, -1, dtype=np.uint64)
     out_shifts = np.arange(16, dtype=np.uint64)
     for pdf in pdfs:
+        pdf = pdf[pdf["text"].notna()]
         out = np.empty(len(pdf), dtype=np.int64)
         for i, text in enumerate(pdf["text"]):
             toks = set(text.split(" "))
@@ -2274,7 +2277,10 @@ def _sem_cell_stats_kernel(pdf):
     the roots, divide) — frame equality asserted at sf0.1 and sf0.5.
     Same-session: 0.65 -> 0.45 s at sf0.1, 2.25 -> 0.57 s at sf0.5.
     Pair order (a.vec_id < b.vec_id) = upper triangle over ids sorted
-    ascending; dropped = distinct right-side ids among kept pairs."""
+    ascending; dropped = distinct right-side ids among kept pairs.
+    This needs vec_id unique within the cell (true of the embeddings
+    table's key): a repeated id would pair with itself, a pair the
+    strict ``<`` excludes, so the kernel raises instead."""
     import numpy as np
     import pandas as pd
     ids = pdf["vec_id"].to_numpy()
@@ -2284,6 +2290,8 @@ def _sem_cell_stats_kernel(pdf):
         return pd.DataFrame({"centroid_id": pdf["centroid_id"].iloc[:1],
                              "members": [m], "dup_pairs": [0],
                              "dropped": [0]})
+    if (ids[o][1:] == ids[o][:-1]).any():
+        raise ValueError("vec_id repeats within a SemDeDup cell")
     q = np.stack(pdf["qv"].to_numpy()[o]).astype(np.int64)
     n2 = pdf["norm2"].to_numpy()[o].astype(np.int64)
     rt = np.sqrt(n2.astype(np.float64))
@@ -2580,13 +2588,15 @@ def _simhash60_codes_kernel(pdfs):
     tokens (set(text.split(' ')), the same set array_distinct built,
     empty tokens included on both paths); bit set iff the signed sum
     is positive, i.e. 2*count_of_ones > n_tokens — integer compares
-    only, no tie-breaking ambiguity, order-independent."""
+    only, no tie-breaking ambiguity, order-independent. A NULL text
+    has no tokens and emits no code, as explode(split(NULL)) did."""
     import hashlib
 
     import numpy as np
     import pandas as pd
     shifts = np.arange(SIMHASH_NBITS, dtype=np.uint64)
     for pdf in pdfs:
+        pdf = pdf[pdf["text"].notna()]
         out = np.empty(len(pdf), dtype=np.int64)
         for i, text in enumerate(pdf["text"]):
             toks = set(text.split(" "))

@@ -320,7 +320,8 @@ def _hh_candidates_partition(pdfs):
     import pandas as pd
     for pdf in pdfs:
         toks = pdf["text"].str.split(" ").explode()
-        toks = toks[toks != ""]
+        # a NULL text explodes to one NaN: no token, so not counted
+        toks = toks[toks.notna() & (toks != "")]
         if toks.empty:
             continue
         vc = toks.value_counts()

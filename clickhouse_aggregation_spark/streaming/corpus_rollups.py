@@ -70,17 +70,19 @@ def _quality_partial(batch: DataFrame) -> DataFrame:
 CORPUS_ROLLUPS: tuple[IncrementalRollup, ...] = (
     IncrementalRollup("source_tokens", ("source",),
                       ("ws_tokens", "bpe_ish_tokens", "total_chars",
-                       "n_docs"), _source_tokens_partial),
-    IncrementalRollup("vocab", ("token",), ("freq",), _vocab_partial),
+                       "n_docs"), _source_tokens_partial, DOCUMENTS),
+    IncrementalRollup("vocab", ("token",), ("freq",), _vocab_partial,
+                      DOCUMENTS),
     # live BPE pair counts (operators/text.bpe_pair_counts — the SAME
     # aggregate as the batch operator, so replay ≡ recompute is exact):
     # the tokenizer-training input stays current as shards land, without
     # ever re-scanning the corpus for the next merge round
     IncrementalRollup("bpe_pairs", ("pair",), ("pair_count",),
-                      bpe_pair_counts),
+                      bpe_pair_counts, DOCUMENTS),
     IncrementalRollup(
         "quality_envelope", ("source",),
         ("min_quality", "max_quality", "n_docs"), _quality_partial,
+        DOCUMENTS,
         merge_exprs=("min(min_quality) AS min_quality",
                      "max(max_quality) AS max_quality",
                      "sum(n_docs) AS n_docs")),
@@ -92,12 +94,12 @@ CORPUS_ROLLUPS: tuple[IncrementalRollup, ...] = (
     # shards
     IncrementalRollup("media_stats", ("kind",),
                       ("n_items", "total_bytes", "px_sum", "amp_sum"),
-                      media_stats_partial),
+                      media_stats_partial, DOCUMENTS),
 )
 
 
 def run_corpus_rollup_stream(spark: SparkSession, docs_dir: str,
                              store_root: str, available_now: bool = True):
     """Tail a documents directory and maintain the corpus rollups."""
-    return run_rollup_stream(spark, docs_dir, DOCUMENTS, store_root,
-                             CORPUS_ROLLUPS, available_now)
+    return run_rollup_stream(spark, docs_dir, store_root, CORPUS_ROLLUPS,
+                             available_now)

@@ -46,11 +46,12 @@ def _dim_partial(batch: DataFrame) -> DataFrame:
 
 
 EMBEDDING_ROLLUPS: tuple[IncrementalRollup, ...] = (
-    IncrementalRollup("gram", ("i", "j"), ("sum_prod",), _gram_partial),
+    IncrementalRollup("gram", ("i", "j"), ("sum_prod",), _gram_partial,
+                      EMBEDDINGS),
     IncrementalRollup(
         "dim_stats", ("i",),
         ("n", "dim_sum", "dim_sumsq", "dim_min", "dim_max"),
-        _dim_partial,
+        _dim_partial, EMBEDDINGS,
         # counts/sums are additive; min/max are mergeable-not-additive
         merge_exprs=("sum(n) AS n",
                      "sum(dim_sum) AS dim_sum",
@@ -64,5 +65,5 @@ def run_embedding_rollup_stream(spark: SparkSession, emb_dir: str,
                                 store_root: str,
                                 available_now: bool = True):
     """Tail an embeddings directory and maintain the matrix rollups."""
-    return run_rollup_stream(spark, emb_dir, EMBEDDINGS, store_root,
-                             EMBEDDING_ROLLUPS, available_now)
+    return run_rollup_stream(spark, emb_dir, store_root, EMBEDDING_ROLLUPS,
+                             available_now)

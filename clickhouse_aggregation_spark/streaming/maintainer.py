@@ -26,19 +26,29 @@ MV). Rebuild mapping:
                          Deterministic log_ids + checkpointing give
                          effectively-once maintenance.
 
-Scale: each batch does one map-side-combinable partial aggregate and
-appends rollup-sized (not fact-sized) files; state lives in the rollup
-table itself, not executor memory, so a 1000-executor cluster maintains
-all rollups with one shuffle per batch per rollup.
+Scale: each batch does one map-side-combinable partial aggregate per
+rollup and appends rollup-sized (not fact-sized) files; state lives in
+the rollup table itself, not executor memory, so a 1000-executor
+cluster maintains all rollups with one shuffle per batch per rollup.
+At shard sizes the cost is per-job overhead, not data: the handler
+submits the rollups' writes together from a thread pool, so a batch
+costs about one write's latency instead of one per rollup. Reads name
+each rollup's state schema up front (``state_schema``, derived once per
+process), so a read lists the store but never opens a parquet footer
+to plan.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import cached_property
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.bucketing import block_hour, block_range_day, size_bucket, to_day
 from ..schemas import TRANSFERS
@@ -47,8 +57,8 @@ from ..schemas import TRANSFERS
 @dataclass(frozen=True)
 class IncrementalRollup:
     """One maintained rollup: ``partial`` maps a (possibly signed) batch
-    of transfers to partial-STATE rows; reads merge states by ``keys``
-    (the SummingMergeTree contract).
+    of ``source_schema`` rows to partial-STATE rows; reads merge states
+    by ``keys`` (the SummingMergeTree contract).
 
     ``merge_exprs`` define how equal-key states combine — ``sum(m)`` by
     default, or a mergeable-sketch union (``hll_union_agg``) for
@@ -63,11 +73,22 @@ class IncrementalRollup:
     keys: tuple[str, ...]
     measures: tuple[str, ...]
     partial: Callable[[DataFrame], DataFrame]
+    source_schema: StructType                      # rows a batch carries
     merge_exprs: tuple[str, ...] | None = None     # default: sum(measure)
     present_exprs: tuple[str, ...] | None = None   # default: identity
 
     def store(self, root: str) -> str:
         return os.path.join(root, self.name)
+
+    @cached_property
+    def state_schema(self) -> StructType:
+        """The schema of this rollup's state rows: ``partial`` analysed
+        over an empty frame of ``source_schema`` (no Spark job). Every
+        store file has it — epoch partials are ``partial`` output, and
+        ``merge_exprs`` keep each measure's type — so reads declare it
+        instead of inferring it from parquet footers."""
+        empty = SparkSession.active().createDataFrame([], self.source_schema)
+        return self.partial(empty).schema
 
     def _merged(self, df: DataFrame) -> DataFrame:
         exprs = self.merge_exprs or tuple(
@@ -84,13 +105,20 @@ class IncrementalRollup:
         batch replays, and a plain append would double-count partials in
         rollups already written. Keying by epoch makes the replay
         idempotent — the retry overwrites exactly its own directory.
+        The stream handler (``write_batch``) runs this for every rollup
+        of a batch at once, each on its own thread; it touches only its
+        own store, so the writes are independent.
         """
         self.partial(batch).write.mode("overwrite").parquet(
             os.path.join(self.store(root), f"epoch={epoch_id}"))
 
     def read_state(self, spark: SparkSession, root: str) -> DataFrame:
-        """Merged (but unfinalized) rollup state."""
-        df = spark.read.option("basePath", self.store(root)) \
+        """Merged (but unfinalized) rollup state: every epoch partial
+        plus any compacted base, read against the declared
+        ``state_schema`` (no schema-inference job) and merged by
+        ``keys``."""
+        df = spark.read.schema(self.state_schema) \
+                       .option("basePath", self.store(root)) \
                        .parquet(self.store(root))
         return self._merged(df.drop("epoch"))
 
@@ -237,21 +265,26 @@ def _hourly_uniq_partial(batch: DataFrame) -> DataFrame:
 
 INCREMENTAL_ROLLUPS: tuple[IncrementalRollup, ...] = (
     IncrementalRollup("daily", ("block_range", "from_address", "to_address"),
-                      ("total_usdc", "tx_count"), _daily_partial),
+                      ("total_usdc", "tx_count"), _daily_partial, TRANSFERS),
     IncrementalRollup("hourly", ("block_hour",),
-                      ("total_volume", "tx_count"), _hourly_partial),
+                      ("total_volume", "tx_count"), _hourly_partial,
+                      TRANSFERS),
     IncrementalRollup("size_dist", ("size_bucket", "day"),
-                      ("tx_count", "total_volume"), _size_dist_partial),
+                      ("tx_count", "total_volume"), _size_dist_partial,
+                      TRANSFERS),
     IncrementalRollup("top_senders", ("block_range", "from_address"),
-                      ("total_sent", "tx_count"), _top_senders_partial),
+                      ("total_sent", "tx_count"), _top_senders_partial,
+                      TRANSFERS),
     IncrementalRollup("top_receivers", ("day", "to_address"),
-                      ("total_received", "tx_count"), _top_receivers_partial),
+                      ("total_received", "tx_count"), _top_receivers_partial,
+                      TRANSFERS),
     IncrementalRollup("top_addresses", ("address", "address_type", "day"),
-                      ("volume", "tx_count"), _top_addresses_partial),
+                      ("volume", "tx_count"), _top_addresses_partial,
+                      TRANSFERS),
     IncrementalRollup(
         "hourly_uniq", ("block_hour",),
         ("total_volume", "tx_count", "senders_sk", "receivers_sk"),
-        _hourly_uniq_partial,
+        _hourly_uniq_partial, TRANSFERS,
         merge_exprs=("sum(total_volume) AS total_volume",
                      "sum(tx_count) AS tx_count",
                      "hll_union_agg(senders_sk) AS senders_sk",
@@ -263,16 +296,39 @@ INCREMENTAL_ROLLUPS: tuple[IncrementalRollup, ...] = (
 )
 
 
-def run_rollup_stream(spark: SparkSession, src_dir: str, schema,
-                      store_root: str,
+def write_batch(rollups: tuple[IncrementalRollup, ...], batch: DataFrame,
+                store_root: str, epoch_id: int) -> None:
+    """The foreachBatch handler body: every rollup's ``process_batch``
+    for one micro-batch, submitted together from a pool with one
+    thread per rollup. A shard-sized write is almost all per-job
+    overhead, so overlapping the writes costs about one write's latency
+    instead of one per rollup. Each worker inherits the stream thread's
+    local properties (``inheritable_thread_target``), so its jobs stay
+    in the query's job group and ``query.stop()`` cancels them.
+
+    Returns or re-raises only once every write has finished: a failed
+    rollup never leaves a sibling still writing while the batch
+    replays. The replay overwrites each rollup's epoch directory,
+    written or not, so it stays idempotent."""
+    inherit = inheritable_thread_target(batch.sparkSession)
+    with ThreadPoolExecutor(max_workers=len(rollups)) as pool:
+        futures = [pool.submit(inherit(r.process_batch), batch, store_root,
+                               epoch_id)
+                   for r in rollups]
+    for f in futures:            # the pool has joined: all are done
+        f.result()
+
+
+def run_rollup_stream(spark: SparkSession, src_dir: str, store_root: str,
                       rollups: tuple[IncrementalRollup, ...],
                       available_now: bool = True):
     """Maintain a set of rollups from a streaming read of any source
     directory — the IncrementalRollup machinery is source-agnostic
-    (a partial maps a batch to state rows; schema comes from the
-    caller). ``availableNow`` drains everything currently present and
-    stops (test/backfill mode); without it the query tails the
-    directory like the reference processor tails the chain."""
+    (a partial maps a batch to state rows; the stream reads the
+    rollups' shared ``source_schema``). ``availableNow`` drains
+    everything currently present and stops (test/backfill mode);
+    without it the query tails the directory like the reference
+    processor tails the chain."""
     checkpoint = os.path.join(store_root, "_checkpoint")
 
     # Epoch-keyed overwrite is only idempotent while epoch ids are
@@ -294,11 +350,10 @@ def run_rollup_stream(spark: SparkSession, src_dir: str, schema,
                 "a fresh store_root")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        for r in rollups:
-            r.process_batch(batch, store_root, epoch_id)
+        write_batch(rollups, batch, store_root, epoch_id)
 
     stream = (
-        spark.readStream.schema(schema).parquet(src_dir)
+        spark.readStream.schema(rollups[0].source_schema).parquet(src_dir)
     )
     writer = (
         stream.writeStream.foreachBatch(handle)
@@ -314,8 +369,8 @@ def run_maintainer_stream(spark: SparkSession, transfers_dir: str,
                           rollups: tuple[IncrementalRollup, ...] = INCREMENTAL_ROLLUPS,
                           available_now: bool = True):
     """The reference surface: maintain the transfers MVs."""
-    return run_rollup_stream(spark, transfers_dir, TRANSFERS, store_root,
-                             rollups, available_now)
+    return run_rollup_stream(spark, transfers_dir, store_root, rollups,
+                             available_now)
 
 
 def streaming_dedup_24h(spark: SparkSession, transfers_dir: str):

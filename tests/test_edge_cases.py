@@ -252,6 +252,68 @@ def test_block_exact_null_text_emits_no_blocks(spark, tmp_path):
     assert got["books"]["n_dup_blocks"] == 1
 
 
+def _docs_with_null_text():
+    import pandas as pd
+    return pd.DataFrame({"doc_id": [1, 2, 3],
+                         "text": ["alpha beta gamma", None, "beta delta"]})
+
+
+def test_simhash16_kernel_drops_null_text_doc():
+    """A NULL text doc drops out of the 16-bit simhash, as it did on the
+    JVM path (and in the DuckDB oracle's unnest(string_split(NULL)))."""
+    import pandas as pd
+
+    from clickhouse_aggregation_spark.operators.dedup import (
+        _simhash16_codes_kernel,
+    )
+    pdf = _docs_with_null_text()
+    got = pd.concat(_simhash16_codes_kernel([pdf]))
+    want = pd.concat(_simhash16_codes_kernel([pdf.iloc[[0, 2]]]))
+    assert got["doc_id"].tolist() == [1, 3]
+    assert got["simhash16"].tolist() == want["simhash16"].tolist()
+
+
+def test_simhash60_kernel_drops_null_text_doc():
+    import pandas as pd
+
+    from clickhouse_aggregation_spark.operators.dedup import (
+        _simhash60_codes_kernel,
+    )
+    pdf = _docs_with_null_text()
+    got = pd.concat(_simhash60_codes_kernel([pdf[["text"]]]))
+    want = pd.concat(_simhash60_codes_kernel([pdf.iloc[[0, 2]][["text"]]]))
+    assert got["code"].tolist() == want["code"].tolist()
+    assert len(got) == 2
+
+
+def test_heavy_hitter_denominator_skips_null_text():
+    """199 distinct tokens each clear freq * 200 > n only if n counts
+    real tokens; a NULL-text doc must not add one to n."""
+    import pandas as pd
+
+    from clickhouse_aggregation_spark.operators.text import (
+        HH_FRACTION, _hh_candidates_partition,
+    )
+    toks = [f"t{i}" for i in range(HH_FRACTION - 1)]
+    pdf = pd.DataFrame({"text": [" ".join(toks), None]})
+    got = pd.concat(_hh_candidates_partition([pdf]))
+    assert sorted(got["token"]) == sorted(toks)
+
+
+def test_sem_cell_stats_rejects_repeated_vec_id():
+    import numpy as np
+    import pandas as pd
+
+    from clickhouse_aggregation_spark.operators.dedup import (
+        _sem_cell_stats_kernel,
+    )
+    qv = np.array([1, 2], dtype=np.int64)
+    pdf = pd.DataFrame({"centroid_id": [0, 0], "vec_id": [5, 5],
+                        "qv": [qv, qv], "norm2": [5, 5]})
+    with pytest.raises(ValueError, match="vec_id repeats"):
+        _sem_cell_stats_kernel(pdf)
+
+
 def test_clear_plan_caches_unpins_and_rebuilds(spark, sf_dir):
     """ADVICE r4: the session plan caches must be evictable — a
     multi-scale bench in one process otherwise pins every scale's

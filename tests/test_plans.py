@@ -25,6 +25,14 @@ def _plan(spark, sf_dir, name: str, execute: bool = False) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_prepared_plans_name_registered_queries():
+    """A misspelt or renamed PREPARED_PLANS entry would silently lose its
+    plan memo."""
+    from clickhouse_aggregation_spark.operators.registry import PREPARED_PLANS
+    assert PREPARED_PLANS <= set(REGISTRY), \
+        sorted(PREPARED_PLANS - set(REGISTRY))
+
+
 def test_q1_filter_pushdown_and_column_pruning(spark, sf_dir):
     plan = _plan(spark, sf_dir, "tpch_q1_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan

@@ -6,13 +6,25 @@ watermark dedup stream must match its batch equivalent."""
 from __future__ import annotations
 
 import os
+import shutil
+import threading
+import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_aggregation_spark.sources.tables import load_table
 from clickhouse_aggregation_spark.sources.transfers import transfers_df
+from clickhouse_aggregation_spark.streaming.corpus_rollups import (
+    CORPUS_ROLLUPS,
+)
+from clickhouse_aggregation_spark.streaming.embedding_rollups import (
+    EMBEDDING_ROLLUPS,
+)
 from clickhouse_aggregation_spark.streaming.maintainer import (
     INCREMENTAL_ROLLUPS, run_maintainer_stream, streaming_dedup_24h,
+    write_batch,
 )
 
 
@@ -186,3 +198,127 @@ def test_stream_shuffle_width_derivation(spark):
     widths = [stream_shuffle_width(spark, n)
               for n in (0, 10**3, 10**4, 10**5, 10**6, 10**9)]
     assert widths == sorted(widths)
+
+
+class _Injected(RuntimeError):
+    pass
+
+
+class _TrackedRollup:
+    """Delegates to a rollup. Its write of ``epoch`` signals ``started``
+    and pauses before writing, so a handler that re-raised early would
+    leave it unfinished; with ``fail`` it raises instead, once every
+    sibling write of the epoch has started."""
+
+    def __init__(self, rollup, epoch, log, fail):
+        self._rollup = rollup
+        self._epoch = epoch
+        self._log = log
+        self._fail = fail
+
+    def __getattr__(self, name):
+        return getattr(self._rollup, name)
+
+    def process_batch(self, batch, root, epoch_id=0):
+        log = self._log
+        log.groups.add(batch.sparkSession.sparkContext.getLocalProperty(
+            "spark.jobGroup.id"))
+        if epoch_id != self._epoch:
+            return self._rollup.process_batch(batch, root, epoch_id)
+        if self._fail:
+            for _ in range(log.siblings):
+                assert log.started.acquire(timeout=60), "siblings not started"
+            raise _Injected(f"injected failure: {self.name} epoch {epoch_id}")
+        log.started.release()
+        time.sleep(0.5)
+        self._rollup.process_batch(batch, root, epoch_id)
+        log.finished.append(self.name)
+
+
+def _inject_failure(rollups, epoch, fail_name):
+    log = SimpleNamespace(started=threading.Semaphore(0), finished=[],
+                          siblings=len(rollups) - 1, groups=set())
+    return log, tuple(_TrackedRollup(r, epoch, log, r.name == fail_name)
+                      for r in rollups)
+
+
+def test_failed_write_reraises_after_sibling_writes(spark, chunked_transfers,
+                                                    tmp_path):
+    """A rollup's failed write surfaces from the handler only once every
+    sibling write of the batch has finished."""
+    _, _, t = chunked_transfers
+    log, rollups = _inject_failure(INCREMENTAL_ROLLUPS, 3, "hourly")
+    with pytest.raises(_Injected):
+        write_batch(rollups, t, str(tmp_path), 3)
+    siblings = [r.name for r in INCREMENTAL_ROLLUPS if r.name != "hourly"]
+    assert sorted(log.finished) == sorted(siblings)
+    for name in siblings:
+        assert os.path.isdir(tmp_path / name / "epoch=3")
+    assert not os.path.exists(tmp_path / "hourly" / "epoch=3")
+
+
+def test_replay_after_mid_handler_failure(spark, chunked_transfers, tmp_path):
+    """Epoch 1 fails in one rollup after its siblings wrote theirs; a
+    restart on the same checkpoint replays the epoch, and every rollup
+    still reads exactly its recompute over all landed rows."""
+    _, tdir, t = chunked_transfers
+    files = sorted(f for f in os.listdir(tdir) if f.endswith(".parquet"))
+    src, store = tmp_path / "src", str(tmp_path / "store")
+    src.mkdir()
+
+    def land(names):
+        for f in names:
+            shutil.copy(os.path.join(tdir, f), src / f)
+
+    land(files[:2])
+    run_maintainer_stream(spark, str(src), store).awaitTermination(120)
+    land(files[2:])
+    log, rollups = _inject_failure(INCREMENTAL_ROLLUPS, 1, "top_senders")
+    q = run_maintainer_stream(spark, str(src), store, rollups)
+    with pytest.raises(Exception, match="injected failure"):
+        q.awaitTermination(120)
+    # the writes ran in the query's job group, which query.stop() cancels
+    assert log.groups == {str(q.runId)}
+    assert len(log.finished) == len(INCREMENTAL_ROLLUPS) - 1
+    assert not os.path.exists(os.path.join(store, "top_senders", "epoch=1"))
+
+    run_maintainer_stream(spark, str(src), store).awaitTermination(120)
+    for rollup in INCREMENTAL_ROLLUPS:
+        assert _as_set(rollup.read(spark, store)) == \
+            _as_set(rollup.recompute(t)), rollup.name
+
+
+_SOURCES = {"transfers": transfers_df,
+            "documents": lambda s, d: load_table(s, d, "documents"),
+            "embeddings": lambda s, d: load_table(s, d, "embeddings")}
+_ALL_ROLLUPS = ([(r, "transfers") for r in INCREMENTAL_ROLLUPS]
+                + [(r, "documents") for r in CORPUS_ROLLUPS]
+                + [(r, "embeddings") for r in EMBEDDING_ROLLUPS])
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+@pytest.mark.parametrize("rollup, source", _ALL_ROLLUPS,
+                         ids=[r.name for r, _ in _ALL_ROLLUPS])
+def test_declared_state_schema_matches_compacted_store(spark, sf_dir,
+                                                       tmp_path, rollup,
+                                                       source):
+    """Reads declare ``state_schema`` instead of inferring it, which
+    holds only if a compacted base has exactly that schema and a read
+    over the base plus later epoch partials still equals recompute()."""
+    src = _SOURCES[source](spark, sf_dir)
+    part = F.pmod(F.xxhash64(*src.columns), F.lit(3))
+    store = str(tmp_path)
+    rollup.process_batch(src.filter(part == 0), store, 0)
+    rollup.compact(spark, store)
+    base = spark.read.parquet(os.path.join(rollup.store(store), "epoch=-1"))
+    assert _fields(base.schema) == _fields(rollup.state_schema)
+    assert _fields(rollup.state_schema) == \
+        _fields(rollup.partial(src).schema)
+    rollup.process_batch(src.filter(part == 1), store, 1)
+    rollup.process_batch(src.filter(part == 2), store, 2)
+    got = _as_set(rollup.read(spark, store))
+    assert got == _as_set(rollup.recompute(src)) and got
+

@@ -1,16 +1,36 @@
 """Operational monitoring (SURVEY.md §2.1 S11) — the Spark equivalents
 of the reference's system.* catalog scans (usdc-transfers/sql/
 monitoring.sql:5-29): replication status → StreamingQuery progress;
-table sizes → catalog + filesystem stats with formatReadableSize.
+table sizes → catalog + filesystem stats with formatReadableSize;
+rollup store sizes and compaction age → ``rollup_stores``.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from ..functions.misc import format_readable_size
+from ..streaming.maintainer import BASE_PARTITION, IncrementalRollup
+
+
+def _footprint(path: str) -> tuple[int, int]:
+    """The parquet files and bytes a table occupies: ``path`` is one
+    file or a directory tree. Like Spark's file listing, it skips
+    directories whose names start with ``_`` or ``.`` (a write's
+    ``_temporary``, a stream's ``_checkpoint``)."""
+    if os.path.isfile(path):
+        return 1, os.path.getsize(path)
+    n_files = n_bytes = 0
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet"):
+                n_files += 1
+                n_bytes += os.path.getsize(os.path.join(dirpath, f))
+    return n_files, n_bytes
 
 
 def table_sizes(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
@@ -18,16 +38,7 @@ def table_sizes(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
     with a human-readable size column (formatReadableSize, F8)."""
     rows = []
     for name, path in paths.items():
-        total = 0
-        n_files = 0
-        if os.path.isfile(path):
-            total, n_files = os.path.getsize(path), 1
-        else:
-            for dirpath, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                        n_files += 1
+        n_files, total = _footprint(path)
         n_rows = spark.read.parquet(path).count() if n_files else 0
         rows.append(Row(table=name, total_bytes=total, n_files=n_files,
                         n_rows=n_rows))
@@ -36,6 +47,25 @@ def table_sizes(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
         df.withColumn("size", format_readable_size(F.col("total_bytes")))
         .orderBy(F.col("total_bytes").desc())
     )
+
+
+def rollup_stores(store_root: str,
+                  rollups: tuple[IncrementalRollup, ...]) -> list[dict]:
+    """Per maintained rollup: the parquet files and bytes its store holds
+    (the bytes ``IncrementalRollup.read_state`` sizes its merge plan by)
+    and the seconds since its last compaction, from the compacted base's
+    mtime (``None`` before the first one). A store whose file count
+    keeps growing is one compaction is not keeping up with."""
+    now = time.time()
+    out = []
+    for r in rollups:
+        store = r.store(store_root)
+        n_files, total = _footprint(store)
+        base = os.path.join(store, BASE_PARTITION)
+        since = now - os.path.getmtime(base) if os.path.isdir(base) else None
+        out.append({"rollup": r.name, "n_files": n_files,
+                    "total_bytes": total, "since_compaction_s": since})
+    return out
 
 
 def streaming_progress(query) -> dict:

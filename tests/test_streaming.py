@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_aggregation_spark.sources.tables import load_table
 from clickhouse_aggregation_spark.sources.transfers import transfers_df
+from clickhouse_aggregation_spark.streaming import maintainer
 from clickhouse_aggregation_spark.streaming.corpus_rollups import (
     CORPUS_ROLLUPS,
 )
@@ -23,8 +24,8 @@ from clickhouse_aggregation_spark.streaming.embedding_rollups import (
     EMBEDDING_ROLLUPS,
 )
 from clickhouse_aggregation_spark.streaming.maintainer import (
-    INCREMENTAL_ROLLUPS, run_maintainer_stream, streaming_dedup_24h,
-    write_batch,
+    BASE_PARTITION, INCREMENTAL_ROLLUPS, run_maintainer_stream,
+    streaming_dedup_24h, write_batch,
 )
 
 
@@ -55,14 +56,6 @@ def maintained_store(spark, chunked_transfers):
     q = run_maintainer_stream(spark, tdir, store)
     q.awaitTermination(120)
     return store
-
-
-def _net_recompute(t, rollup):
-    signed = t.select(
-        "*",
-        (F.col("value") * F.col("_sign")).alias("_svalue"),
-        F.col("_sign").cast("long").alias("_scount"))
-    return rollup.partial(t)  # partial over the WHOLE table == recompute
 
 
 def _as_set(df):
@@ -198,6 +191,61 @@ def test_stream_shuffle_width_derivation(spark):
     widths = [stream_shuffle_width(spark, n)
               for n in (0, 10**3, 10**4, 10**5, 10**6, 10**9)]
     assert widths == sorted(widths)
+
+
+def _collect_in_group(spark, df, gid):
+    """``df.collect()`` in job group ``gid``: its rows as a set of
+    string tuples, and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return ({tuple(str(v) for v in row) for row in rows},
+            len(sc.statusTracker().getJobIdsForGroup(gid)))
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_store_merges_in_one_task(spark, chunked_transfers, tmp_path,
+                                        monkeypatch):
+    """A store of at most SINGLE_TASK_BYTES merges with no Exchange, so
+    read() plus a dashboard's own group-by and top-k is one Spark job.
+    With the threshold below the store's bytes, the same store keeps
+    the shuffle. Both plans read exactly recompute(), and a compaction
+    writes the small store's base as one file."""
+    _, _, t = chunked_transfers
+    rollup = next(r for r in INCREMENTAL_ROLLUPS if r.name == "top_senders")
+    store = str(tmp_path)
+    part = F.pmod(F.xxhash64(*t.columns), F.lit(3))
+    for epoch in range(3):
+        rollup.process_batch(t.filter(part == epoch), store, epoch)
+    want = _as_set(rollup.recompute(t))
+
+    small = rollup.read(spark, store)
+    got, jobs = _collect_in_group(spark, small, "small-store-read")
+    assert got == want and jobs == 1
+    assert "Exchange" not in _executed_plan(small)
+    top = (small.groupBy("from_address")
+           .agg(F.sum("total_sent").alias("volume"))
+           .orderBy(F.col("volume").desc(), "from_address").limit(10))
+    got, jobs = _collect_in_group(spark, top, "small-store-top-k")
+    assert len(got) == 10 and jobs == 1
+
+    with monkeypatch.context() as m:
+        m.setattr(maintainer, "SINGLE_TASK_BYTES", 0)
+        large = rollup.read(spark, store)
+        got, _ = _collect_in_group(spark, large, "large-store-read")
+    assert got == want
+    assert "Exchange" in _executed_plan(large)
+
+    rollup.compact(spark, store)
+    base = os.path.join(rollup.store(store), BASE_PARTITION)
+    assert len([f for f in os.listdir(base) if f.endswith(".parquet")]) == 1
+    assert _as_set(rollup.read(spark, store)) == want
 
 
 class _Injected(RuntimeError):

@@ -55,8 +55,8 @@ from ..sources.tables import load_table
 from .contamination import (CONTAM_THRESHOLD, EVAL_MOD, _SH_SQL,
                             q_contamination_ngram_overlap)
 from .dedup import (COSINE_DUP_THRESHOLD, DOC_SETS_SQL, JACCARD_THRESHOLD,
-                    _banded_posts_sql, _minhash_sql, confirmed_banded_pairs,
-                    confirmed_minhash_pairs)
+                    _band_planes_sql, _banded_posts_sql, _minhash_sql,
+                    confirmed_banded_pairs, confirmed_minhash_pairs)
 from .pipeline import (BLOCK_PATTERN, EPOCH_SEED, EPOCH_SHARDS, QUALITY_MIN,
                        TEMP_BUCKETS, TEMP_SALT)
 from ..caches import PlanCache
@@ -134,6 +134,9 @@ exact_dropped AS (
 ),
 emb_q AS (SELECT vec_id, {quantize.SQL} AS qv FROM embeddings),
 n AS (SELECT vec_id, qv, {int_norm2.SQL} AS norm2 FROM emb_q),
+planes AS MATERIALIZED (
+{_band_planes_sql()}
+),
 posts AS MATERIALIZED (
 {_banded_posts_sql()}
 ),

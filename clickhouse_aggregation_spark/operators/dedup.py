@@ -916,13 +916,13 @@ def _banded_planes_sql() -> str:
 
 def _band_key_sql(planes: list[list[int]]) -> str:
     """Per-plane sign bits as an EXPLICIT 64-term sum (qv[1]*w1 + …)
-    rather than list_transform over a positional-indexed array
-    literal: DuckDB re-materializes the plane literal per element per
-    row in the lambda form — measured ~8.5 s/2000 rows vs 0.42 s/80k
-    rows for the explicit sum (round 11; this was the dominant cost
-    of every router-oracle sweep). qv elements are BIGINT (quantize
-    casts), so the sum is exact BIGINT arithmetic — values verified
-    bit-identical to the lambda form before adoption."""
+    for planes given as Python lists. Not list_transform over a
+    positional-indexed array LITERAL: DuckDB re-materializes a plane
+    literal per element per row in the lambda form — measured ~8.5
+    s/2000 rows vs 0.42 s/80k rows for the explicit sum (round 11).
+    A plane held as a COLUMN (``_banded_posts_sql``'s plane table) has
+    no such cost. qv elements are BIGINT (quantize casts), so the sum
+    is exact BIGINT arithmetic."""
     parts = []
     for p in planes:
         dot = " + ".join(f"qv[{i + 1}]*({w})" for i, w in enumerate(p))
@@ -930,23 +930,42 @@ def _band_key_sql(planes: list[list[int]]) -> str:
     return " || ".join(parts)
 
 
-def _banded_posts_sql(bands: int = EMB_BANDS, src: str = "n") -> str:
-    """Per-band posting lists with the corpus-size plane knob applied
-    IN SQL: each band's key is the full 10-plane bit string, truncated
-    to the P(n) prefix — prefix-of-key ≡ using only the first P planes,
-    so one static oracle is parameter-correct at every scale factor.
-    ``bands`` > EMB_BANDS appends the escalation-ladder bands (the
-    floor router's rungs); ``src`` names the normalized-vector CTE to
+def _band_planes_sql(bands: int = EMB_BANDS) -> str:
+    """The seeded plane table of the first ``bands`` bands as ONE static
+    VALUES list, a row (band, plane, w BIGINT[]) per plane, stated once
+    and joined by ``_banded_posts_sql`` as the ``planes`` CTE. Inlining
+    bands x planes explicit 64-term dot products instead made the
+    81-band posting SQL 837 KB (240 KB as a table), and planning it
+    alone took DuckDB ~19 s. Each plane is a list literal cast from
+    text, so the parser sees one constant per plane, not per weight."""
+    rows = ",\n".join(
+        f"({b}, {i}, '[{','.join(str(w) for w in plane)}]')"
+        for b in range(bands) for i, plane in enumerate(BAND_PLANES_ALL[b]))
+    return ("SELECT CAST(band AS INT) AS band, CAST(plane AS INT) AS plane,"
+            " CAST(w AS BIGINT[]) AS w\n"
+            f"FROM (VALUES\n{rows}\n) v(band, plane, w)")
+
+
+def _banded_posts_sql(src: str = "n") -> str:
+    """Per-band posting lists over the ``planes`` CTE
+    (``_band_planes_sql``) with the corpus-size plane knob applied IN
+    SQL: each band's key is the sign bits of its first P(n) planes in
+    plane order — the prefix of the full 10-plane key, so one static
+    oracle is parameter-correct at every scale factor. The band count
+    is the plane table's; ``src`` names the normalized-vector CTE to
     post (capped-only ledgers post ``nc`` so the oracle never keys the
-    full corpus)."""
-    p = _banded_planes_sql()
-    selects = [
-        f"SELECT vec_id, qv, norm2, {b} AS band, "
-        f"substr({_band_key_sql(BAND_PLANES_ALL[b])}, 1, {p}) "
-        f"AS bkey FROM {src}"
-        for b in range(bands)
-    ]
-    return "\nUNION ALL\n".join(selects)
+    full corpus). The dot products are exact: BIGINT products summed
+    as HUGEINT."""
+    return f"""SELECT s.vec_id, s.qv, s.norm2, k.band, k.bkey
+FROM {src} s JOIN (
+  SELECT s.vec_id, pl.band,
+         string_agg(CASE WHEN list_sum(list_transform(
+                      s.qv, (x, i) -> x * pl.w[i])) >= 0
+                    THEN '1' ELSE '0' END, '' ORDER BY pl.plane) AS bkey
+  FROM {src} s, planes pl
+  WHERE pl.plane < {_banded_planes_sql()}
+  GROUP BY 1, 2
+) k ON k.vec_id = s.vec_id"""
 
 
 @register(
@@ -956,6 +975,8 @@ WITH q AS (
   SELECT vec_id, {quantize.SQL} AS qv FROM embeddings
 ), n AS (
   SELECT vec_id, qv, {int_norm2.SQL} AS norm2 FROM q
+), planes AS MATERIALIZED (
+{_band_planes_sql()}
 ), posts AS MATERIALIZED (
 {_banded_posts_sql()}
 )
@@ -1207,6 +1228,8 @@ WITH q AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM bkt a JOIN bkt b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
   WHERE {COSINE_ORACLE_EXPR} >= {COSINE_DUP_THRESHOLD}
+), planes AS MATERIALIZED (
+{{band_planes}}
 ), posts AS MATERIALIZED (
 {{banded_posts}}
 ), banded AS (
@@ -1228,6 +1251,7 @@ SELECT CAST((SELECT count(*) FROM base) AS BIGINT) AS n_true,
        CAST((SELECT count(*) FROM base JOIN banded
              ON base.vec_a = banded.vec_a AND base.vec_b = banded.vec_b)
             AS DOUBLE) / (SELECT count(*) FROM base) AS banded_recall"""
+    .replace("{band_planes}", _band_planes_sql())
     .replace("{banded_posts}", _banded_posts_sql()),
     doc="Near-dup index-quality monitor: pair recall of BOTH sign-LSH "
         "variants against the exact (capped-domain) cosine baseline, "
@@ -1744,7 +1768,10 @@ def _router_ctes(threshold: float, capped_only: bool = False) -> str:
     exactly like the Python router's None), the full-corpus confirmed
     pairs with the same min-band annotation (every rung's routed pair
     count is a filter of it), and the IVF arm. Shared by the
-    floor-route oracles and the IVF fallback recall ledger.
+    floor-route oracles and the IVF fallback recall ledger. Every CTE
+    read more than once is MATERIALIZED: DuckDB otherwise re-evaluates
+    it per reference, and a floor-route oracle's final SELECT alone
+    holds 48 scalar subqueries over ``rec``.
 
     ``capped_only=True`` drops every full-corpus table (``posts``,
     ``full_c``, the n×K assignment, ``ivf_full``) and builds the
@@ -1767,7 +1794,7 @@ def _router_ctes(threshold: float, capped_only: bool = False) -> str:
         posts_block = f"""nc AS MATERIALIZED (
   SELECT * FROM n WHERE vec_id < {COSINE_BASELINE_CAP}
 ), postsc AS MATERIALIZED (
-{_banded_posts_sql(EMB_BANDS_MAX, src="nc")}
+{_banded_posts_sql(src="nc")}
 )"""
         full_c_block = ""
         corpus_block = f"""distsc AS (
@@ -1776,19 +1803,19 @@ def _router_ctes(threshold: float, capped_only: bool = False) -> str:
                             ORDER BY nc.norm2 + c.c_norm2
            - 2 * {dot_sql('nc.qv', 'c.c_qv')}, c.centroid_id) AS _rk
   FROM nc, cents c
-), corpusc AS (
+), corpusc AS MATERIALIZED (
   SELECT nc.vec_id, nc.qv, nc.norm2, d.centroid_id
   FROM distsc d JOIN nc ON d.vec_id = nc.vec_id WHERE d._rk = 1
 )"""
     else:
         posts_block = f"""posts AS MATERIALIZED (
-{_banded_posts_sql(EMB_BANDS_MAX)}
+{_banded_posts_sql()}
 ), nc AS (
   SELECT * FROM n WHERE vec_id < {COSINE_BASELINE_CAP}
 ), postsc AS (
   SELECT * FROM posts WHERE vec_id < {COSINE_BASELINE_CAP}
 )"""
-        full_c_block = f""", full_c AS (
+        full_c_block = f""", full_c AS MATERIALIZED (
   SELECT a.vec_id AS va, b.vec_id AS vb, min(a.band) AS mband
   FROM posts a JOIN posts b
     ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
@@ -1801,7 +1828,7 @@ def _router_ctes(threshold: float, capped_only: bool = False) -> str:
                             ORDER BY n.norm2 + c.c_norm2
            - 2 * {dot_sql('n.qv', 'c.c_qv')}, c.centroid_id) AS _rk
   FROM n, cents c
-), corpus AS (
+), corpus AS MATERIALIZED (
   SELECT n.vec_id, n.qv, n.norm2, d.centroid_id
   FROM dists d JOIN n ON d.vec_id = n.vec_id WHERE d._rk = 1
 ), ivf_full AS (
@@ -1809,36 +1836,38 @@ def _router_ctes(threshold: float, capped_only: bool = False) -> str:
   FROM corpus a JOIN corpus b
     ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
   WHERE {COSINE_ORACLE_EXPR} >= {t}
-), corpusc AS (
+), corpusc AS MATERIALIZED (
   SELECT vec_id, qv, norm2, centroid_id FROM corpus
   WHERE vec_id < {COSINE_BASELINE_CAP}
 )"""
-    return f"""q AS (
+    return f"""planes AS MATERIALIZED (
+{_band_planes_sql(EMB_BANDS_MAX)}
+), q AS (
   SELECT vec_id, {quantize.SQL} AS qv FROM embeddings
 ), n AS MATERIALIZED (
   SELECT vec_id, qv, {int_norm2.SQL} AS norm2 FROM q
-), {posts_block}, base AS (
+), {posts_block}, base AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM nc a, nc b
   WHERE a.vec_id < b.vec_id
     AND {COSINE_ORACLE_EXPR} >= {t}
-), cand_c AS (
+), cand_c AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, min(a.band) AS mband
   FROM postsc a JOIN postsc b
     ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
   WHERE {COSINE_ORACLE_EXPR} >= {t}
   GROUP BY 1, 2
-), rec AS (
+), rec AS MATERIALIZED (
   SELECT {rung_recalls}
 ){full_c_block}, cents AS (
   SELECT vec_id AS centroid_id, qv AS c_qv, norm2 AS c_norm2
   FROM n WHERE vec_id < {sem_centroids_sql()}
-), {corpus_block}, ivf_cq AS (
+), {corpus_block}, ivf_cq AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM corpusc a JOIN corpusc b
     ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
   WHERE {COSINE_ORACLE_EXPR} >= {t}
-), rec_ivf AS (
+), rec_ivf AS MATERIALIZED (
   SELECT CAST((SELECT count(*) FROM base JOIN ivf_cq
                ON base.vec_a = ivf_cq.vec_a
               AND base.vec_b = ivf_cq.vec_b) AS DOUBLE)
@@ -2001,8 +2030,8 @@ WITH {_router_ctes(threshold, capped_only=True)}, m AS (
 ), nd AS MATERIALIZED (
   SELECT * FROM n WHERE vec_id % (SELECT mm FROM m) = 0
 ), postsd AS MATERIALIZED (
-{_banded_posts_sql(EMB_BANDS_MAX, src="nd")}
-), cand_d AS (
+{_banded_posts_sql(src="nd")}
+), cand_d AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {COSINE_ORACLE_EXPR} AS cosine, min(a.band) AS mband
   FROM postsd a JOIN postsd b
@@ -2015,10 +2044,10 @@ WITH {_router_ctes(threshold, capped_only=True)}, m AS (
                             ORDER BY nd.norm2 + c.c_norm2
            - 2 * {dot_sql('nd.qv', 'c.c_qv')}, c.centroid_id) AS _rk
   FROM nd, cents c
-), corpusd AS (
+), corpusd AS MATERIALIZED (
   SELECT nd.vec_id, nd.qv, nd.norm2, d.centroid_id
   FROM distsd d JOIN nd ON d.vec_id = nd.vec_id WHERE d._rk = 1
-), ivf_d AS (
+), ivf_d AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {COSINE_ORACLE_EXPR} AS cosine
   FROM corpusd a JOIN corpusd b
@@ -2124,14 +2153,16 @@ def _ladder_profile_oracle() -> str:
     t = repr(float(COSINE_DUP_THRESHOLD))
     rungs = ", ".join(str(b) for b in BAND_LADDER)
     return f"""
-WITH q AS (
+WITH planes AS MATERIALIZED (
+{_band_planes_sql(EMB_BANDS_MAX)}
+), q AS (
   SELECT vec_id, {quantize.SQL} AS qv FROM embeddings
 ), n AS (
   SELECT vec_id, qv, {int_norm2.SQL} AS norm2 FROM q
 ), nc AS MATERIALIZED (
   SELECT * FROM n WHERE vec_id < {COSINE_BASELINE_CAP}
 ), postsc AS MATERIALIZED (
-{_banded_posts_sql(EMB_BANDS_MAX, src="nc")}
+{_banded_posts_sql(src="nc")}
 ), base AS MATERIALIZED (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM nc a, nc b
@@ -2204,6 +2235,8 @@ WITH q AS (
   SELECT vec_id, {quantize.SQL} AS qv FROM embeddings
 ), n AS (
   SELECT vec_id, qv, {int_norm2.SQL} AS norm2 FROM q
+), planes AS MATERIALIZED (
+{{band_planes}}
 ), posts AS MATERIALIZED (
 {{banded_posts}}
 ), dups AS (
@@ -2215,8 +2248,9 @@ WITH q AS (
 SELECT e.vec_id, CAST(e.label AS INT) AS label
 FROM embeddings e
 LEFT JOIN dups ON dups.dropped = e.vec_id
-WHERE dups.dropped IS NULL""".replace("{banded_posts}",
-                                      _banded_posts_sql()),
+WHERE dups.dropped IS NULL""".replace(
+        "{band_planes}", _band_planes_sql()).replace(
+        "{banded_posts}", _banded_posts_sql()),
     doc="The removal stage of embedding near-dedup (the minhash_"
         "survivors twin on the vector side): keep-lowest-vec_id policy "
         "over the BANDED sign-LSH confirmed pairs (the recall-honest "

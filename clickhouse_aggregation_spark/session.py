@@ -17,6 +17,28 @@ from pyspark.sql import SparkSession
 # all local cores. On a real cluster these come from the submit conf.
 _CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
+# heap ceiling when the host is large; below 32 GB of RAM the default
+# is half of physical memory instead (see default_driver_memory)
+_MAX_DRIVER_MIB = 16 * 1024
+
+
+def physical_memory_bytes() -> int:
+    """The host's physical RAM, the figure every in-process memory
+    default (this heap, the test oracle's DuckDB cap) is derived from."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set,
+    else min(16g, half of physical RAM) in MiB. A flat 16g is more than
+    a 16 GB host holds, and the kernel's OOM killer, not the JVM's GC,
+    then decides when the heap stops growing. Half leaves the other
+    half to DuckDB, the Python workers and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{min(_MAX_DRIVER_MIB, physical_memory_bytes() // 2 // 2**20)}m"
+
 
 def get_spark(app_name: str = "clickhouse_aggregation_spark",
               shuffle_partitions: int | None = None,
@@ -27,6 +49,10 @@ def get_spark(app_name: str = "clickhouse_aggregation_spark",
     (``spark.sql.adaptive.coalescePartitions``) from the advisory
     target below; locally we pin the initial number to the core count
     so tiny inputs don't over-parallelize.
+
+    The driver heap is ``default_driver_memory()``: the
+    ``SPARK_GRAFT_DRIVER_MEM`` env var when set (``perfbench`` pins
+    2g through it), else min(16g, half of physical RAM).
     """
     n_shuffle = shuffle_partitions or max(_CPUS, 4)
     builder = (
@@ -59,7 +85,7 @@ def get_spark(app_name: str = "clickhouse_aggregation_spark",
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # the generated-code cache defaults to 100 entries; a session
         # running the full ~100-query registry compiles several codegen
         # stages per query, so the default thrashes late in a long

@@ -15,6 +15,16 @@ import duckdb
 import pandas as pd
 
 from clickhouse_aggregation_spark.schemas import DRIVER_TABLES
+from clickhouse_aggregation_spark.session import physical_memory_bytes
+
+
+def oracle_memory_limit() -> str:
+    """DuckDB ``memory_limit`` for an oracle connection:
+    ``ORACLE_MEMORY_LIMIT`` when set, else a quarter of physical RAM.
+    Spark's heap defaults to half (``session.default_driver_memory``),
+    so the two ceilings together stay under the host's memory."""
+    return os.environ.get("ORACLE_MEMORY_LIMIT") or (
+        f"{physical_memory_bytes() // 4 // 2**20}MiB")
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -30,13 +40,13 @@ def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # then fail cleanly) rather than balloon the process toward the
     # OOM killer while Spark's JVM holds its own multi-GiB heap in
     # the same box (observed round 11: an uncapped monolithic router
-    # oracle at 80 GiB RSS alongside a 17 GiB JVM). Env-overridable
-    # for scale-artifact runs whose n x K window materializations
-    # legitimately need more (e.g. the sf16 domain check's 26.7k x
-    # 625-centroid assignment — a pin-heavy window DuckDB cannot
-    # fully spill).
-    con.execute("SET memory_limit='%s'"
-                % os.environ.get("ORACLE_MEMORY_LIMIT", "32GB"))
+    # oracle at 80 GiB RSS alongside a 17 GiB JVM). The cap is derived
+    # from the host's RAM (oracle_memory_limit); a flat figure above
+    # it cannot make DuckDB spill. Env-overridable for scale-artifact
+    # runs whose n x K window materializations legitimately need more
+    # (e.g. the sf16 domain check's 26.7k x 625-centroid assignment —
+    # a pin-heavy window DuckDB cannot fully spill).
+    con.execute("SET memory_limit='%s'" % oracle_memory_limit())
     for name in DRIVER_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):

@@ -12,7 +12,7 @@ runs, no driver-side materialization cost), timed individually.
 Output discipline (round-3 lesson, extended in round 12): the full
 per-query JSON line above is long (~100 queries) and a bounded
 tail-capture can truncate its HEAD, leaving unparseable bytes
-(BENCH_r03.json recorded rc=0 but parsed=null). So the full line
+(the round-3 record had rc=0 but parsed=null). So the full line
 prints FIRST and a compact summary line — total, query count, sf only
 — prints LAST: any tail window that sees the end of the output
 contains at least one complete JSON line.

@@ -193,11 +193,10 @@ def _pr_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         # the executed plan — nodes' distinct leaves the cached frame
         # hash-partitioned on (a, width) and the per-iteration
         # join-back reuses it (final plan: no Exchange above the nodes
-        # scan; plans/r12/transfers_pagerank3_*). An explicit
-        # repartition(width, "a") produced a BIT-IDENTICAL physical
-        # plan (Catalyst collapses it into the distinct's exchange)
-        # and an order-swapped same-session A/B showed no effect
-        # (tools/pagerank_probe.py; the first probe's apparent win was
+        # scan). An explicit repartition(width, "a") produced a
+        # BIT-IDENTICAL physical plan (Catalyst collapses it into the
+        # distinct's exchange) and an order-swapped same-session A/B
+        # showed no effect (the first probe's apparent win was
         # build-order warm-up, not partitioning). What WAS real waste:
         # nodes re-derived edges from parquet on its first
         # materialization — deriving from the persisted e frame is
@@ -248,7 +247,6 @@ FROM r{PR_ITERS}""")
 
 @register(
     "transfers_pagerank3",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=_pagerank_oracle(),
     doc="Weighted PageRank (3 unrolled iterations, damping 0.85) over "
         "the live transfer graph in fixed-point int64 — floor-division "

@@ -248,7 +248,6 @@ def _annotated(spark: SparkSession, sf_dir: str,
 
 @register(
     "pipeline_end_to_end",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=_funnel_sql(),
     doc="The composed curation pipeline as one artifact: exact+MinHash"
         "+banded-embedding dedup -> verbatim+near-dup decontamination "

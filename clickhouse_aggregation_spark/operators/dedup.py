@@ -546,7 +546,6 @@ def _simhash16_codes_kernel(pdfs):
 
 @register(
     "dedup_simhash",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH toks AS (
   SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -725,7 +724,7 @@ def embedding_lsh_pairs(emb: DataFrame) -> DataFrame:
 # parameters below (12 bands × 5 planes) are the measured sweet spot on
 # the fixture: recall 11/14 true pairs with ~3× fewer candidates than
 # brute force (seeded planes → both numbers deterministic and pinned in
-# tests). The honest scale statement, recorded here and in NOTES_r4:
+# tests). The honest scale statement (round 4):
 # sign-LSH prunes aggressively only when the threshold is high (true
 # near-dup territory, cosine ≥ 0.9 — where the 8-plane variant's
 # p^8 ≈ 0.78 per bucket works); at similarity-mining thresholds like
@@ -851,10 +850,10 @@ BAND_PLANES_ESC4: list[list[list[int]]] = [
 # parameterization rung 54 is exhausted for real (measured
 # 0.154/0.192/0.385/0.462/0.538 vs floor 0.576311; the best-of arm
 # fired ORGANICALLY for the first time and served the IVF arm at
-# 0.5769, the round-10 pre-81 record in CORRECTNESS_local_sf8.0 /
-# NOTES_r10). Rung 81 is ×1.5 per the same rho-analysis as every
-# rung, and it is terminal BY CONSTRUCTION, not by hope: an
-# at-threshold pair's per-band collision probability is p(t)^P with
+# 0.5769, the round-10 pre-81 record at sf8.0). Rung 81 is ×1.5 per
+# the same rho-analysis as every rung, and it is terminal BY
+# CONSTRUCTION, not by hope: an at-threshold pair's per-band
+# collision probability is p(t)^P with
 # p(t) = 1 - acos(t)/pi, so its expected rung-81 recall is
 # 1 - (1 - p(t)^P)^81 — at the clamped P = 10 and the hardest valid
 # threshold t = 0.45 that is 0.658 >= floor 0.576, the margin GROWS
@@ -912,22 +911,6 @@ def _banded_planes_sql() -> str:
     return (f"(SELECT {EMB_BAND_PLANES} + greatest(0, least("
             f"{BANDED_MAX_EXTRA}, CAST(floor(log2(count(*) / "
             f"{BANDED_N_REF}.0)) AS INT))) FROM embeddings)")
-
-
-def _band_key_sql(planes: list[list[int]]) -> str:
-    """Per-plane sign bits as an EXPLICIT 64-term sum (qv[1]*w1 + …)
-    for planes given as Python lists. Not list_transform over a
-    positional-indexed array LITERAL: DuckDB re-materializes a plane
-    literal per element per row in the lambda form — measured ~8.5
-    s/2000 rows vs 0.42 s/80k rows for the explicit sum (round 11).
-    A plane held as a COLUMN (``_banded_posts_sql``'s plane table) has
-    no such cost. qv elements are BIGINT (quantize casts), so the sum
-    is exact BIGINT arithmetic."""
-    parts = []
-    for p in planes:
-        dot = " + ".join(f"qv[{i + 1}]*({w})" for i, w in enumerate(p))
-        parts.append(f"(CASE WHEN {dot} >= 0 THEN '1' ELSE '0' END)")
-    return " || ".join(parts)
 
 
 def _band_planes_sql(bands: int = EMB_BANDS) -> str:
@@ -1127,7 +1110,7 @@ def _banded_verified_rows(emb: DataFrame, n_corpus: int | None,
     if band_lo:
         posts = posts.withColumn("band", F.col("band") + F.lit(band_lo))
     # EXPLICIT-width repartition on the join keys, for two reasons
-    # found by measurement (NOTES_r4): (a) the posts shuffle is tiny
+    # found by measurement (round 4): (a) the posts shuffle is tiny
     # (narrow rows), so AQE coalesces the join to ONE partition while
     # the join OUTPUT explodes to ~0.2·n² verify rows — 15× slower at
     # sf0.1, 1-task at every scale; an explicit numPartitions is
@@ -2341,7 +2324,6 @@ def _sem_cell_stats_kernel(pdf):
 
 @register(
     "dedup_semantic",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH q AS (
   SELECT vec_id, {quantize.SQL} AS qv FROM embeddings
@@ -2658,7 +2640,6 @@ def simhash60_groups(docs: DataFrame) -> DataFrame:
 
 @register(
     "dedup_simhash_hamming",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH {_simhash60_sql().strip()},
 inter AS (

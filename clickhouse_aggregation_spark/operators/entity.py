@@ -87,7 +87,6 @@ def q_events_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_quantiles",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle="""
 WITH ranked AS (
   SELECT event_type, value,

@@ -285,24 +285,6 @@ DECODE_SCHEMA = T.StructType([
 ])
 
 
-def _decode_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched REAL decode: binary payload in, typed decoded
-    stats out, one row per media item, via decode_media."""
-    cols = [f.name for f in DECODE_SCHEMA.fields]
-    for pdf in batches:
-        out: dict[str, list] = {c: [] for c in cols}
-        for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                      pdf["payload"]):
-            b = bytes(payload)
-            d = decode_media(b, kind)
-            out["media_id"].append(int(mid))
-            out["kind"].append(kind)
-            out["n_bytes"].append(len(b))
-            for c in cols[3:]:
-                out[c].append(d.get(c))
-        yield pd.DataFrame(out)
-
-
 def _synth_decode_stats(batches: Iterator[pd.DataFrame]
                         ) -> Iterator[pd.DataFrame]:
     """Fused synthesize→decode in ONE Python stage (OPTIMIZATION r12,

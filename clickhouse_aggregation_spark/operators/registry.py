@@ -31,9 +31,9 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default=())
     raw_fn: SparkQuery = None   # pre-contract callable (for plan inspection)
     raw_oracle: str | None = None
-    memo_plan: bool = False     # prepared-plan memo opt-in (see _PLAN_MEMO);
-                                # recorded so the zero-jobs construction gate
-                                # in tests/test_plans.py can enumerate opt-ins
+    memo_plan: bool = False     # in PREPARED_PLANS (see _PLAN_MEMO); recorded
+                                # so the zero-jobs construction gate in
+                                # tests/test_plans.py can enumerate opt-ins
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -67,15 +67,15 @@ REGISTRY: dict[str, QuerySpec] = {}
 # gate, LWW, subtotals, WITH FILL, flagship re-agg, minhash pairs,
 # verbatim decontamination, as-of, sessionization, IVF build, Q4,
 # multimodal). The 31 demoted queries below were ALL driver-green in
-# CORRECTNESS_r04.json.
+# the round-4 correctness run.
 EXTRAS: tuple[str, ...] = (
     "orders_priority_by_month",
     "top_customers_per_nation",
     "sql_adhoc_daily_volume",
     "mv_usdc_hourly_ts",
     "mv_usdc_hourly_block_approx",   # rows-only by design (A3 estimate)
-    # Demoted in the round-2/3 rebalances (driver-green r1-r3; see
-    # NOTES_r2/r3 for each one's checked sibling):
+    # Demoted in the round-2/3 rebalances (driver-green r1-r3; each
+    # has a checked declared sibling):
     "mv_usdc_daily_ts",
     "readme_size_distribution",
     "monitoring_recent_sample",
@@ -101,8 +101,8 @@ EXTRAS: tuple[str, ...] = (
     "tpch_q5_local_supplier_volume",
     "tpch_q6_forecast_revenue",
     "tpch_q18_large_orders",
-    # Demoted in the round-4 rotation (driver-green r3; checked
-    # siblings listed in NOTES_r4 §3):
+    # Demoted in the round-4 rotation (driver-green r3; each has a
+    # checked declared sibling):
     "mv_usdc_daily_block",
     "mv_tx_size_distribution",
     "mv_recent_activity",
@@ -138,8 +138,8 @@ EXTRAS: tuple[str, ...] = (
     "disjunctive_promo_revenue",
     "late_sole_supplier",
     "idle_rich_customers",
-    # Demoted THIS round (round-5 rotation; ALL driver-green in
-    # CORRECTNESS_r04.json — the external check is on record):
+    # Demoted in the round-5 rotation (ALL driver-green in the round-4
+    # correctness run — the external check is on record):
     #   dedup_embedding_lsh — its declared slot passes to the banded
     #     variant + recall monitor (the r4 VERDICT's top item: the
     #     single-bucket row was parity-true but zero-recall at this
@@ -306,19 +306,21 @@ def extras_order() -> list[str]:
     return [n for n in EXTRAS if n in REGISTRY]
 
 
-# Prepared-plan memo (OPTIMIZATION r11, guide §5 — driver work): for a
-# query whose fn is PURE LAZY CONSTRUCTION (no job, no checkpoint, no
-# count/collect, no store driving — only DataFrame composition over the
-# session-immutable table plans), the returned DataFrame is a pure
-# function of (session, sf_dir), so rebuilding its expression tree
-# through py4j on every call is repeated driver-side work for an
-# identical object. ``memo_plan=True`` opts such a query into a
-# per-(session, sf_dir) plan memo. STRICTLY construction-only reuse:
+# Prepared-plan memo (driver work): for a query whose fn is PURE LAZY
+# CONSTRUCTION (no job, no checkpoint, no count/collect, no store
+# driving — only DataFrame composition over the session-immutable table
+# plans), the returned DataFrame is a pure function of (session,
+# sf_dir), so rebuilding its expression tree through py4j on every call
+# is repeated driver-side work for an identical object (0.03-0.10 s per
+# query; rebuilding per call made a 10-query pass over perfbench's
+# adhoc_scan fixture 12.5 % slower). Listing such a query in
+# PREPARED_PLANS opts it into a per-(session, sf_dir) plan memo.
+# STRICTLY construction-only reuse:
 # nothing is materialized at build time, and every action on the memoed
 # frame re-executes the full computation from parquet (Catalyst
 # re-optimizes per action; only the Python-side tree build is skipped).
 # Queries that do eager driver work inside fn (iterative loops, route
-# decisions, epoch driving) MUST NOT set it — for them a memo would
+# decisions, epoch driving) MUST NOT be listed — for them a memo would
 # skip recomputation, which is result caching, not preparation.
 _PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = PlanCache(
     capacity=512, on_evict=lambda _v: None, notify_family_evict=False)
@@ -341,18 +343,13 @@ def _retire_plans_for_family_evict(family_key) -> None:
 FAMILY_EVICT_HOOKS.append(_retire_plans_for_family_evict)
 
 
-# Prepared-plan opt-in, CENTRAL list (OPTIMIZATION r12). Round 11
-# flagged 13 queries at their registration sites; this round extends
-# the memo to every other audited pure-lazy bench query in one
-# reviewable place. Membership is determined by MEASUREMENT, not by
-# reading tea leaves: tools/memo_audit.py re-constructs every bench
-# query's finalized frame with warm session indexes and keeps exactly
-# those that schedule ZERO Spark jobs (the audit artifact is in
-# OPTIMIZATION_r12.md), and tests/test_plans.py's zero-jobs gate
-# re-enforces the property for every member on every test run.
+# Prepared-plan opt-in: the one list of queries whose fn is pure lazy
+# construction. Membership is measured, not read off the code:
+# tests/test_plans.py's zero-jobs gate constructs every member's
+# finalized frame with warm session indexes and fails if it schedules
+# a Spark job.
 #
-# Deliberately NOT members (eager-at-construction by contract, the
-# same exclusions round 11 documented):
+# Deliberately NOT members (eager at construction by contract):
 #   - the 12 streaming facades (store driving inside fn),
 #   - similarity_ivf_kmeans_refine, dedup_clusters (iterative loops
 #     that run jobs inside fn),
@@ -366,22 +363,21 @@ PREPARED_PLANS = frozenset({
     "asof_signup_attribution", "brands_never_discounted",
     "bulk_part_suppliers", "cheapest_supplier_per_part",
     "contamination_neardup", "contamination_ngram_overlap",
-    "customer_order_distribution", "dedup_block_exact",
-    "dedup_containment", "dedup_embedding_cosine", "dedup_embedding_lsh",
+    "customer_order_distribution", "dedup_block_exact", "dedup_containment",
+    "dedup_embedding_cosine", "dedup_embedding_lsh",
     "dedup_embedding_lsh_banded", "dedup_embedding_lsh_recall",
     "dedup_embedding_survivors", "dedup_exact", "dedup_latest_version",
     "dedup_minhash_lsh", "dedup_minhash_survivors", "dedup_ngram_jaccard",
-    "dedup_source_overlap", "disjunctive_promo_revenue",
-    "embedding_dim_stats", "embedding_gram_matrix",
-    "embedding_label_centroids", "entity_by_id", "events_audience_overlap",
-    "events_funnel_depth", "events_json_daily", "events_k_entropy",
-    "events_props_json_stats", "events_retention_cohorts",
+    "dedup_semantic", "dedup_simhash", "dedup_simhash_hamming",
+    "dedup_source_overlap", "disjunctive_promo_revenue", "embedding_dim_stats",
+    "embedding_gram_matrix", "embedding_label_centroids", "entity_by_id",
+    "events_audience_overlap", "events_funnel_depth", "events_json_daily",
+    "events_k_entropy", "events_props_json_stats", "events_retention_cohorts",
     "events_running_user_stats", "events_sequence_count",
-    "events_sequence_match", "events_sessionization",
-    "events_top_transitions", "events_type_pivot",
-    "events_value_k_regression", "events_value_outliers",
-    "idle_rich_customers", "late_order_priorities", "late_sole_supplier",
-    "market_share_by_year", "monitoring_global_stats",
+    "events_sequence_match", "events_sessionization", "events_top_transitions",
+    "events_type_pivot", "events_value_k_regression", "events_value_outliers",
+    "events_value_quantiles", "idle_rich_customers", "late_order_priorities",
+    "late_sole_supplier", "market_share_by_year", "monitoring_global_stats",
     "multimodal_decode_audit", "multimodal_decode_stats",
     "multimodal_feature_extract", "multimodal_frame_sample",
     "multimodal_resize", "mv_daily_with_fill", "mv_recent_activity",
@@ -391,32 +387,33 @@ PREPARED_PLANS = frozenset({
     "orders_brand_basket_lift", "orders_rfm_segments",
     "orders_with_returns_by_priority", "part_supplier_variety",
     "pipeline_blocklist_scrub", "pipeline_bottomk_per_source",
-    "pipeline_bottomk_sample", "pipeline_clean_corpus",
-    "pipeline_curate_topn", "pipeline_domain_mix", "pipeline_dsir_sample",
+    "pipeline_bottomk_sample", "pipeline_clean_corpus", "pipeline_curate_topn",
+    "pipeline_domain_mix", "pipeline_dsir_sample", "pipeline_end_to_end",
     "pipeline_epoch_shuffle", "pipeline_length_buckets",
     "pipeline_pack_invariants", "pipeline_pack_sequences",
     "pipeline_split_assign", "pipeline_temperature_mix",
     "product_profit_by_nation_year", "readme_daily_volume_7d",
-    "readme_top_senders", "retraction_net_daily",
-    "returnflag_priority_mix", "similarity_lsh_bucketed",
-    "similarity_lsh_recall", "similarity_topk_bruteforce",
+    "readme_top_senders", "retraction_net_daily", "returnflag_priority_mix",
+    "similarity_ivf_nprobe_sweep", "similarity_ivf_topk",
+    "similarity_ivfpq_residual", "similarity_lsh_bucketed",
+    "similarity_lsh_multiprobe", "similarity_lsh_recall",
+    "similarity_pq_rerank", "similarity_topk_bruteforce",
     "small_order_part_revenue", "sql_adhoc_whale_report",
-    "supplier_revenue_share", "text_bm25_topk", "text_bpe_pair_counts",
-    "text_heavy_hitters", "text_language_id", "text_novel_trigram_rate",
+    "supplier_revenue_share", "text_bm25_topk", "text_bpe_encode_corpus",
+    "text_bpe_pair_counts", "text_bpe_train_merges", "text_heavy_hitters",
+    "text_language_id", "text_novel_trigram_rate",
     "text_quality_robust_calibration", "text_repetition_stats",
     "text_tfidf_topk", "text_token_count", "text_unigram_logppl",
-    "text_vocab_coverage", "text_vocab_topk",
-    "text_weighted_length_quantiles", "tiered_union_stats",
-    "top_customers_per_nation", "top_revenue_supplier",
+    "text_vocab_coverage", "text_vocab_topk", "text_weighted_length_quantiles",
+    "tiered_union_stats", "top_customers_per_nation", "top_revenue_supplier",
     "tpch_q18_large_orders", "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "uniq_hll_merge_rollup",
+    "tpch_q6_forecast_revenue", "transfers_pagerank3", "uniq_hll_merge_rollup",
 })
 
 
 def register(name: str, oracle: str | None = None, doc: str = "",
-             tags: tuple[str, ...] = (),
-             memo_plan: bool = False) -> Callable[[SparkQuery], SparkQuery]:
+             tags: tuple[str, ...] = ()) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: add a declared query to the registry.
 
     The stored ``fn``/``oracle`` are wrapped with the output contract
@@ -429,7 +426,7 @@ def register(name: str, oracle: str | None = None, doc: str = "",
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
-        memo = memo_plan or name in PREPARED_PLANS
+        memo = name in PREPARED_PLANS
         if memo:
             def finalized(spark: SparkSession, sf_dir: str,
                           _fn: SparkQuery = fn) -> DataFrame:

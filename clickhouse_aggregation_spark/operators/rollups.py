@@ -41,8 +41,6 @@ def live(t: DataFrame) -> DataFrame:
     return t.filter(F.col("_sign") == 1)
 
 
-LIVE_SQL = "SELECT * FROM transfers WHERE _sign = 1"
-
 # ---------------------------------------------------------------------------
 # rollup transforms (used by batch queries here AND by the streaming
 # maintainers in streaming/maintainer.py — single definition each)
@@ -74,7 +72,7 @@ def mv_usdc_hourly_block(t: DataFrame, approx: bool = False) -> DataFrame:
     RewriteDistinctAggregates Expand tripled every input row before
     the exchange. Same-session A/B: 2.27→1.98 s at sf0.5 (where the
     ×3 blowup dominates), 0.99 vs 1.03 s at sf0.1 (noise); values
-    identical (hash-checksummed, tools/expand_probe.py; the unpivot
+    identical (hash-checksummed; the unpivot
     single-scan variant measured WORSE at sf0.5 and was rejected). At
     100 TB the pre-aggregates partial-combine map-side, so shuffle
     bytes scale with distinct pairs, not with 3× the fact rows. The
@@ -300,7 +298,7 @@ def q_approx_uniq_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max-merged per hashed value, so duplicates never change the
     # sketch). Replaces the mixed countDistinct+approx single pass
     # whose RewriteDistinctAggregates Expand tripled the input rows.
-    # Same-session A/B (tools/expand_probe.py, hash-checksummed):
+    # Same-session A/B (hash-checksummed):
     # 1.28→0.92 s at sf0.1, 2.18→1.85 s at sf0.5.
     rsd = 0.05
     lv = live(transfers_df(spark, sf_dir))

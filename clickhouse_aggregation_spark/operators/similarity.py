@@ -155,15 +155,11 @@ def q_similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _plane_sql(plane: list[int]) -> str:
-    return "[" + ", ".join(str(x) for x in plane) + "]"
-
-
 def _bucket_sql() -> str:
     # explicit per-term sum, not list_transform over a positional-
     # indexed plane LITERAL: DuckDB re-materializes the literal per
-    # element per row in the lambda form (measured ~4000x slower —
-    # see dedup._band_key_sql). qv is BIGINT, so the sum is exact;
+    # element per row in the lambda form (measured ~4000x slower in
+    # round 11). qv is BIGINT, so the sum is exact;
     # values are bit-identical to the lambda form.
     parts = []
     for p in PLANES:
@@ -251,7 +247,6 @@ def _flip_col(bucket: Column, i: int) -> Column:
 
 @register(
     "similarity_lsh_multiprobe",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH {_QUANT_SQL.strip()},
 bucketed AS (
@@ -474,7 +469,6 @@ def sem_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_ivf_topk",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH {_QUANT_SQL.strip()},
 cents AS (
@@ -716,7 +710,6 @@ FROM bf b LEFT JOIN sel{np_} s
 
 @register(
     "similarity_ivf_nprobe_sweep",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH {_QUANT_SQL.strip()},
 cents AS (
@@ -848,7 +841,6 @@ cand AS (
 
 @register(
     "similarity_pq_rerank",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=f"""
 WITH {_QUANT_SQL.strip()},
 {_pq_sql().strip()},
@@ -1308,7 +1300,6 @@ FROM ranked WHERE rank <= {TOP_K}"""
 
 @register(
     "similarity_ivfpq_residual",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=_ivfpq_oracle(),
     doc="IVF-PQ with residual encoding (the FAISS production-index "
         "composition): coarse assignment to 16 seeded cells, PQ codes "

@@ -50,7 +50,7 @@ _STREAM_TIMEOUT_S = 600
 # schedules width× state-store instances / shuffle tasks regardless
 # of data volume — measured at sf0.1, the stateful sketch drive was
 # 3.3x faster at 8 than at 32 and the embedding-neardup drive 1.4x
-# (NOTES_r8). The derivation sizes one task per
+# (round 8). The derivation sizes one task per
 # STREAM_TARGET_ROWS_PER_TASK epoch rows, clamped to
 # [STREAM_MIN_PARTITIONS, defaultParallelism]: tiny fixture batches
 # get the few-task drive the r8 measurement asked for, and a 100 TB

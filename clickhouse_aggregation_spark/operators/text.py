@@ -1097,7 +1097,6 @@ def _bpe_train_oracle(rounds: int = BPE_MERGE_ROUNDS) -> str:
 
 @register(
     "text_bpe_train_merges",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=_bpe_train_oracle(),
     doc="The BPE tokenizer-training LOOP (Sennrich 2016, alg. 1): "
         f"{BPE_MERGE_ROUNDS} rounds of weighted argmax adjacent-pair "
@@ -1160,7 +1159,6 @@ GROUP BY sw.source""")
 
 @register(
     "text_bpe_encode_corpus",
-    memo_plan=True,   # pure lazy construction (see registry._PLAN_MEMO)
     oracle=_bpe_encode_oracle(),
     doc="Apply the trained BPE merges to the corpus — the encode half "
         "of tokenizer training: the same merge loop runs to completion "

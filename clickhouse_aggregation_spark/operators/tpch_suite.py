@@ -763,7 +763,7 @@ def q_orders_brand_basket_lift(spark: SparkSession,
     # all three consumers — per-brand order counts, the distinct-order
     # total, and the pair generator — derive from it, sharing the
     # basket build's exchange; the countDistinct Expand disappears
-    # (plans/r11/orders_brand_basket_lift_{before,after}.txt). Values
+    # from the executed plan. Values
     # are identical: explode(set) re-creates exactly the distinct
     # (order, brand) rows.
     baskets = (li.select("l_orderkey", "l_partkey")

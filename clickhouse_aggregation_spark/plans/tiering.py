@@ -51,10 +51,6 @@ def write_partitioned(df: DataFrame, path: str,
     )
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def archive_old_transfers(spark: SparkSession, hot_dir: str, archive_dir: str,
                           keep_blocks: int = KEEP_HOT_BLOCKS,
                           granularity: int = BLOCK_PARTITION_GRANULARITY) -> int:

@@ -29,19 +29,6 @@ TRANSFERS = T.StructType([
     T.StructField("_version", T.LongType(), False),
 ])
 
-# Raw EVM log rows before ABI decode (FIXTURES.md §2; reference
-# usdc-transfers/src/main.ts:77-94, src/abi/usdc.ts:20).
-RAW_LOGS = T.StructType([
-    T.StructField("log_id", T.StringType(), False),
-    T.StructField("block_number", T.IntegerType(), False),
-    T.StructField("address", T.StringType(), False),
-    T.StructField("topic0", T.StringType(), False),
-    T.StructField("topic1", T.StringType(), True),
-    T.StructField("topic2", T.StringType(), True),
-    T.StructField("data", T.StringType(), True),
-    T.StructField("transaction_hash", T.StringType(), False),
-])
-
 # Driver synthetic tables (TESTDATA.md; schemas read from the parquet
 # footers — kept here so streaming readers never infer).
 EVENTS = T.StructType([

@@ -21,7 +21,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-_TEXT_FORMATS = {"json", "csv"}
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
 

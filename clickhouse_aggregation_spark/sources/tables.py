@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..caches import PlanCache
 from ..schemas import DRIVER_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Lazy PLAN cache (OPTIMIZATION r11, guide §5: the driver should do
 # almost no work). ``spark.read.parquet`` is driver-side work on every
 # call — a py4j round trip plus an eager footer read for schema — and

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.similarity import (N_CENTROIDS, int_dot, int_norm2,
                                     quantize)
 from ..schemas import EMBEDDINGS
+from .maintainer import write_epoch
 
 CELLS_DIR = "cell_index"
 
@@ -99,9 +100,8 @@ def process_batch(batch: DataFrame, cents: DataFrame,
     """Assign one micro-batch against the FROZEN quantizer ``cents``
     (loaded once by ``load_centroids_once`` — never re-read from the
     still-arriving stream source mid-stream)."""
-    cells = assign_cells(batch, cents)
-    cells.write.mode("overwrite").parquet(
-        os.path.join(root, CELLS_DIR, f"epoch={epoch_id}"))
+    write_epoch(assign_cells(batch, cents), os.path.join(root, CELLS_DIR),
+                epoch_id)
 
 
 def run_ann_index_stream(spark: SparkSession, vecs_dir: str,

@@ -37,25 +37,11 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..operators.contamination import (CONTAM_THRESHOLD,
                                        doc_shingle_hashes_df)
 from ..schemas import DOCUMENTS
+from .maintainer import read_epochs, write_epoch
 
 TRAIN_DIR = "train_index"
 EVAL_DIR = "eval_index"
 FLAGS_DIR = "flags"
-
-
-def _read_epochs(spark: SparkSession, root: str, sub: str,
-                 before_epoch: int) -> DataFrame | None:
-    path = os.path.join(root, sub)
-    if not os.path.isdir(path) or not any(
-            e.name.startswith("epoch=") for e in os.scandir(path)):
-        return None
-    return (spark.read.parquet(path)
-            .filter(F.col("epoch") < before_epoch).drop("epoch"))
-
-
-def _write_epoch(df: DataFrame, root: str, sub: str, epoch: int) -> None:
-    df.write.mode("overwrite").parquet(
-        os.path.join(root, sub, f"epoch={epoch}"))
 
 
 def _flag_pairs(train: DataFrame, ev: DataFrame) -> DataFrame:
@@ -83,17 +69,19 @@ def process_batch(spark: SparkSession, batch: DataFrame, root: str,
         ev = (sh.filter(F.col("is_eval")).select("doc_id", "h")
               .withColumn("n", F.count(F.lit(1))
                           .over(Window.partitionBy("doc_id"))))
-        prior_train = _read_epochs(spark, root, TRAIN_DIR, epoch_id)
-        prior_eval = _read_epochs(spark, root, EVAL_DIR, epoch_id)
+        prior_train = read_epochs(spark, os.path.join(root, TRAIN_DIR),
+                                  epoch_id)
+        prior_eval = read_epochs(spark, os.path.join(root, EVAL_DIR),
+                                 epoch_id)
 
         all_eval = ev if prior_eval is None else ev.unionByName(prior_eval)
         flags = _flag_pairs(train, all_eval)
         if prior_train is not None:
             flags = flags.unionByName(_flag_pairs(prior_train, ev))
 
-        _write_epoch(flags, root, FLAGS_DIR, epoch_id)
-        _write_epoch(train, root, TRAIN_DIR, epoch_id)
-        _write_epoch(ev, root, EVAL_DIR, epoch_id)
+        write_epoch(flags, os.path.join(root, FLAGS_DIR), epoch_id)
+        write_epoch(train, os.path.join(root, TRAIN_DIR), epoch_id)
+        write_epoch(ev, os.path.join(root, EVAL_DIR), epoch_id)
     finally:
         sh.unpersist()
 

@@ -46,24 +46,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.dedup import COSINE_DUP_THRESHOLD
 from ..operators.similarity import _bucket_col, int_dot, int_norm2, quantize
 from ..schemas import EMBEDDINGS
+from .maintainer import read_epochs, write_epoch
 
 INDEX_DIR = "index"
 PAIRS_DIR = "dup_pairs"
-
-
-def _read_epochs(spark: SparkSession, root: str, sub: str,
-                 before_epoch: int) -> DataFrame | None:
-    path = os.path.join(root, sub)
-    if not os.path.isdir(path) or not any(
-            e.name.startswith("epoch=") for e in os.scandir(path)):
-        return None
-    return (spark.read.parquet(path)
-            .filter(F.col("epoch") < before_epoch).drop("epoch"))
-
-
-def _write_epoch(df: DataFrame, root: str, sub: str, epoch: int) -> None:
-    df.write.mode("overwrite").parquet(
-        os.path.join(root, sub, f"epoch={epoch}"))
 
 
 def _canon(pairs: DataFrame) -> DataFrame:
@@ -90,7 +76,7 @@ def process_batch(spark: SparkSession, batch: DataFrame, root: str,
                 "y -> struct(x AS vec_a, y AS vec_b))))")).alias("p"))
             .select("p.vec_a", "p.vec_b"))
 
-        prior = _read_epochs(spark, root, INDEX_DIR, epoch_id)
+        prior = read_epochs(spark, os.path.join(root, INDEX_DIR), epoch_id)
         cand = _canon(in_batch)
         all_vecs = idx.select("vec_id", "qv", "norm2")
         if prior is not None:
@@ -114,8 +100,8 @@ def process_batch(spark: SparkSession, batch: DataFrame, root: str,
                  .select("vec_a", "vec_b", cos.alias("cosine"))
                  .filter(F.col("cosine") >= COSINE_DUP_THRESHOLD))
 
-        _write_epoch(pairs, root, PAIRS_DIR, epoch_id)
-        _write_epoch(idx, root, INDEX_DIR, epoch_id)
+        write_epoch(pairs, os.path.join(root, PAIRS_DIR), epoch_id)
+        write_epoch(idx, os.path.join(root, INDEX_DIR), epoch_id)
     finally:
         idx.unpersist()
 

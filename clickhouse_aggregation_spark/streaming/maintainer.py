@@ -62,6 +62,26 @@ from ..schemas import TRANSFERS
 # the partition a compaction writes: a store's merged base state
 BASE_PARTITION = "epoch=-1"
 
+
+def write_epoch(df: DataFrame, store: str, epoch_id: int) -> None:
+    """Write ``df`` as the store's ``epoch=<epoch_id>`` partition with
+    OVERWRITE, so a replayed epoch rewrites exactly its own directory."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(store, f"epoch={epoch_id}"))
+
+
+def read_epochs(spark: SparkSession, store: str,
+                before_epoch: int) -> DataFrame | None:
+    """The store's rows from epochs before ``before_epoch`` (the
+    ``epoch`` partition column dropped), or None while the store has no
+    ``epoch=`` directory."""
+    if not os.path.isdir(store) or not any(
+            e.name.startswith("epoch=") for e in os.scandir(store)):
+        return None
+    return (spark.read.parquet(store)
+            .filter(F.col("epoch") < before_epoch).drop("epoch"))
+
+
 # the largest store ``read_state`` merges in one task, in parquet bytes.
 # Measured on a 4-core host over daily and top_addresses stores built
 # from transfers (merge alone, and with a dashboard's group-by/top-k):
@@ -125,8 +145,7 @@ class IncrementalRollup:
         of a batch at once, each on its own thread; it touches only its
         own store, so the writes are independent.
         """
-        self.partial(batch).write.mode("overwrite").parquet(
-            os.path.join(self.store(root), f"epoch={epoch_id}"))
+        write_epoch(self.partial(batch), self.store(root), epoch_id)
 
     def read_state(self, spark: SparkSession, root: str) -> DataFrame:
         """Merged (but unfinalized) rollup state: every epoch partial

@@ -44,25 +44,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.dedup import (JACCARD_THRESHOLD, doc_shingle_sets,
                                minhash_band_keys)
 from ..schemas import DOCUMENTS
+from .maintainer import read_epochs, write_epoch
 
 BAND_DIR = "band_index"
 SETS_DIR = "doc_sets"
 PAIRS_DIR = "dup_pairs"
-
-
-def _read_epochs(spark: SparkSession, root: str, sub: str,
-                 before_epoch: int) -> DataFrame | None:
-    path = os.path.join(root, sub)
-    if not os.path.isdir(path) or not any(
-            e.name.startswith("epoch=") for e in os.scandir(path)):
-        return None
-    return (spark.read.parquet(path)
-            .filter(F.col("epoch") < before_epoch).drop("epoch"))
-
-
-def _write_epoch(df: DataFrame, root: str, sub: str, epoch: int) -> None:
-    df.write.mode("overwrite").parquet(
-        os.path.join(root, sub, f"epoch={epoch}"))
 
 
 def _canon(pairs: DataFrame) -> DataFrame:
@@ -87,8 +73,8 @@ def process_batch(spark: SparkSession, batch: DataFrame, root: str,
                 "y -> struct(x AS doc_a, y AS doc_b))))")).alias("p"))
             .select("p.doc_a", "p.doc_b"))
 
-        prior_bk = _read_epochs(spark, root, BAND_DIR, epoch_id)
-        prior_sets = _read_epochs(spark, root, SETS_DIR, epoch_id)
+        prior_bk = read_epochs(spark, os.path.join(root, BAND_DIR), epoch_id)
+        prior_sets = read_epochs(spark, os.path.join(root, SETS_DIR), epoch_id)
         cand = _canon(in_batch)
         all_sets = sets
         if prior_bk is not None:
@@ -111,9 +97,9 @@ def process_batch(spark: SparkSession, batch: DataFrame, root: str,
                  .select("doc_a", "doc_b", jaccard.alias("jaccard"))
                  .filter(F.col("jaccard") >= JACCARD_THRESHOLD))
 
-        _write_epoch(pairs, root, PAIRS_DIR, epoch_id)
-        _write_epoch(bk, root, BAND_DIR, epoch_id)
-        _write_epoch(sets, root, SETS_DIR, epoch_id)
+        write_epoch(pairs, os.path.join(root, PAIRS_DIR), epoch_id)
+        write_epoch(bk, os.path.join(root, BAND_DIR), epoch_id)
+        write_epoch(sets, os.path.join(root, SETS_DIR), epoch_id)
     finally:
         sets.unpersist()
         bk.unpersist()

@@ -24,8 +24,8 @@ from clickhouse_aggregation_spark.streaming.embedding_rollups import (
     EMBEDDING_ROLLUPS,
 )
 from clickhouse_aggregation_spark.streaming.maintainer import (
-    BASE_PARTITION, INCREMENTAL_ROLLUPS, run_maintainer_stream,
-    streaming_dedup_24h, write_batch,
+    BASE_PARTITION, INCREMENTAL_ROLLUPS, read_epochs, run_maintainer_stream,
+    streaming_dedup_24h, write_batch, write_epoch,
 )
 
 
@@ -334,6 +334,25 @@ def test_replay_after_mid_handler_failure(spark, chunked_transfers, tmp_path):
     for rollup in INCREMENTAL_ROLLUPS:
         assert _as_set(rollup.read(spark, store)) == \
             _as_set(rollup.recompute(t)), rollup.name
+
+
+def test_read_epochs_before_epoch(spark, tmp_path):
+    """The streaming maintainers' index read: None until the store has
+    an ``epoch=`` directory, then only the epochs before the one being
+    written, so a replayed batch sees exactly the index it saw first."""
+    store = str(tmp_path / "index")
+    assert read_epochs(spark, store, 5) is None
+    os.makedirs(os.path.join(store, "_checkpoint"))
+    assert read_epochs(spark, store, 5) is None
+    for epoch in range(4):
+        write_epoch(spark.range(epoch * 10, epoch * 10 + 3), store, epoch)
+    write_epoch(spark.range(100, 101), store, 2)   # a replay overwrites
+    got = read_epochs(spark, store, 3)
+    assert got.columns == ["id"]
+    assert sorted(r.id for r in got.collect()) == [0, 1, 2, 10, 11, 12, 100]
+    assert sorted(r.id for r in read_epochs(spark, store, 1).collect()) \
+        == [0, 1, 2]
+    assert read_epochs(spark, store, 0).count() == 0
 
 
 _SOURCES = {"transfers": transfers_df,

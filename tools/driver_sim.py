@@ -30,7 +30,7 @@ assert len(rows) > 0
 # 2. queries vs oracles at sf0.01
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 con = duckdb.connect()
-# same over-budget guard the test oracle harness carries (NOTES_r7 §3:
+# same over-budget guard the test oracle harness carries (round 7:
 # an uncapped truth-set build at sf2.0 once spilled >200 GiB of DuckDB
 # temp and ENOSPC'd the host) — fail fast instead of filling the disk
 con.execute("SET max_temp_directory_size='40GiB'")

@@ -2,7 +2,7 @@
 """Generate a larger-SF throwaway fixture by deterministic, NON-SATURATING
 amplification of /root/testdata/sf0.1 (VERDICT r3 #7: pin the scaling
 exponent of the rollup/join/dedup families at a genuinely larger scale,
-without the 100x-replica saturation caveat of tools/scale_probe.py).
+without the saturation caveat of plain 100x replicas).
 
 Amplification rules (factor R replicas, replica 0 = the original):
 
@@ -40,8 +40,7 @@ Usage:  python tools/gen_scale_fixture.py [R] [OUT_DIR]
 Then:   SPARK_GRAFT_SF_DIR=OUT_DIR python bench.py
 
 The output directory name should end in sf<x> so bench.py records the
-right sf. The fixture is throwaway — never committed; only the bench
-artifact and the per-query scaling discussion (NOTES_r4.md) are.
+right sf. The fixture is throwaway — never committed.
 """
 
 from __future__ import annotations

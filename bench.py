@@ -327,9 +327,7 @@ def run_scale(spark, sf_dir: str) -> dict:
 
     def run(names: list[str], out: dict[str, float]) -> None:
         for name in names:
-            spec = REGISTRY.get(name)
-            if spec is None:
-                continue
+            spec = REGISTRY[name]     # a stale name fails the run
             # warm the plan shape on the smoke-scale data: whole-stage
             # codegen compiles once per query structure (Janino is ~10 s
             # for the biggest lambda trees) and is cached by generated

@@ -34,8 +34,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caches import PlanCache
 from ..sources.tables import load_table
-from ..streaming.contamination import read_flags, run_contamination_stream
-from ..streaming.neardup import read_dup_pairs, run_neardup_stream
 from .registry import REGISTRY, register
 from .text import BPE_PAIRS_SQL
 
@@ -245,10 +243,12 @@ def _maintainer_specs() -> dict[str, dict]:
     cycle-avoidance as the facades' inline imports)."""
     from ..sources.transfers import transfers_df
     from ..streaming.ann_index import run_ann_index_stream
+    from ..streaming.contamination import run_contamination_stream
     from ..streaming.corpus_rollups import run_corpus_rollup_stream
     from ..streaming.embedding_neardup import run_embedding_neardup_stream
     from ..streaming.embedding_rollups import run_embedding_rollup_stream
     from ..streaming.maintainer import run_maintainer_stream
+    from ..streaming.neardup import run_neardup_stream
 
     return {
         "neardup": dict(runner=run_neardup_stream),
@@ -427,6 +427,7 @@ def _maintained_store(spark: SparkSession, sf_dir: str, kind: str,
     tags=("streaming",),
 )
 def q_streaming_neardup_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.neardup import read_dup_pairs, run_neardup_stream
     store = _maintained_store(spark, sf_dir, "neardup", run_neardup_stream)
     return read_dup_pairs(spark, store).select("doc_a", "doc_b", "jaccard")
 
@@ -443,6 +444,7 @@ def q_streaming_neardup_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_contamination_epochs(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
+    from ..streaming.contamination import read_flags, run_contamination_stream
     store = _maintained_store(spark, sf_dir, "contamination",
                               run_contamination_stream)
     flags = read_flags(spark, store)

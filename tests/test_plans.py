@@ -33,6 +33,15 @@ def test_prepared_plans_name_registered_queries():
         sorted(PREPARED_PLANS - set(REGISTRY))
 
 
+def test_bench_names_registered_queries():
+    """bench.py times HEADLINE and BASELINES by registry name; a name
+    that is not registered would fail the bench run mid-way."""
+    import bench
+    for names in (bench.HEADLINE, bench.BASELINES):
+        assert set(names) <= set(REGISTRY), sorted(set(names) - set(REGISTRY))
+        assert len(names) == len(set(names))
+
+
 def test_memoized_queries_are_exactly_prepared_plans():
     """PREPARED_PLANS is the only way into the plan memo: every
     memoized registry entry is listed there, and every listed entry is

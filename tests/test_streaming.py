@@ -7,8 +7,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 import threading
 import time
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -27,6 +30,25 @@ from clickhouse_aggregation_spark.streaming.maintainer import (
     BASE_PARTITION, INCREMENTAL_ROLLUPS, read_epochs, run_maintainer_stream,
     streaming_dedup_24h, write_batch, write_epoch,
 )
+
+
+_REPO = Path(__file__).resolve().parents[1]
+_STREAMING_MODULES = sorted(
+    p.stem for p in (_REPO / "clickhouse_aggregation_spark" / "streaming")
+    .glob("*.py") if p.stem != "__init__")
+
+
+@pytest.mark.parametrize("module", _STREAMING_MODULES)
+def test_streaming_module_imports_first(module):
+    """Each streaming module must import on its own in a fresh
+    interpreter: an operators module that imports a maintainer at
+    module top closes a cycle (maintainer -> operators -> maintainer)
+    that only shows when the maintainer is the first import."""
+    name = f"clickhouse_aggregation_spark.streaming.{module}"
+    done = subprocess.run([sys.executable, "-c", f"import {name}"],
+                          cwd=_REPO, capture_output=True, text=True,
+                          timeout=120)
+    assert done.returncode == 0, done.stderr[-2000:]
 
 
 @pytest.fixture(scope="module")

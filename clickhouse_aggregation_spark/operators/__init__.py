@@ -2,7 +2,7 @@ from .registry import REGISTRY, QuerySpec, register  # noqa: F401
 
 # importing the modules populates the registry
 from . import (  # noqa: F401,E402
-    rollups, queries, tpch, tpch_more, similarity, dedup, text, multimodal,
+    rollups, queries, tpch, similarity, dedup, text, multimodal,
     abi, entity, sqltext, clustering, asof, windows, pipeline,
-    contamination, behavior, tpch_suite, streaming_bridge, curation,
+    contamination, tpch_suite, streaming_bridge, curation,
 )

@@ -37,10 +37,6 @@ CONTRACTS: dict[str, dict[str, str]] = {'mv_usdc_daily_block': {'total_usdc': 'i
  'tpch_q5_local_supplier_volume': {'revenue': 'f64'},
  'top_customers_per_nation': {'total_spend': 'f64'},
  'orders_priority_by_month': {'total_price': 'f64'},
- 'tpch_q6_forecast_revenue': {'revenue': 'f64'},
- 'tpch_q10_returned_items': {'revenue': 'f64'},
- 'tpch_q14_conditional_share': {'promo_revenue': 'f64', 'total_revenue': 'f64'},
- 'tpch_q18_large_orders': {'o_totalprice': 'f64'},
  'abi_decode_transfers': {'value': 'i64'},
  'tiered_union_stats': {'net_volume': 'i64'},
  'entity_by_id': {'value': 'i64'},

@@ -58,8 +58,6 @@ EXTRAS: tuple[str, ...] = (
     "readme_size_distribution",
     "monitoring_recent_sample",
     "entity_filter_paginated",
-    "tpch_q10_returned_items",
-    "tpch_q14_conditional_share",
     "pipeline_domain_mix",
     "mv_top_senders",
     "mv_top_receivers",
@@ -77,8 +75,6 @@ EXTRAS: tuple[str, ...] = (
     "events_cooccurrence_5min",
     "tpch_q3_shipping_priority",
     "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q18_large_orders",
     "mv_usdc_daily_block",
     "mv_tx_size_distribution",
     "mv_recent_activity",
@@ -96,8 +92,6 @@ EXTRAS: tuple[str, ...] = (
     "text_tfidf_topk",
     "events_hourly_window",
     "events_value_quantiles",
-    "events_retention_cohorts",
-    "events_funnel_depth",
     "pipeline_clean_corpus",
     "pipeline_split_assign",
     "pipeline_curate_topn",
@@ -115,20 +109,15 @@ EXTRAS: tuple[str, ...] = (
     "late_sole_supplier",
     "idle_rich_customers",
     "dedup_embedding_lsh",
-    "events_audience_overlap",
     "events_k_entropy",
     "events_props_json_stats",
     "events_running_user_stats",
-    "events_sequence_count",
-    "events_sequence_match",
-    "events_top_transitions",
     "events_type_pivot",
     "events_value_k_regression",
     "events_value_outliers",
     "address_flow_setops",
     "returnflag_priority_mix",
     "orders_brand_basket_lift",
-    "orders_rfm_segments",
     "dedup_containment",
     "dedup_simhash_hamming",
     "dedup_source_overlap",
@@ -145,11 +134,9 @@ EXTRAS: tuple[str, ...] = (
     "uniq_hll_merge_rollup",
     "streaming_ivf_search_epochs",
     "streaming_quantile_sketch_epochs",
-    "brands_never_discounted",
     "bulk_part_suppliers",
     "pipeline_length_buckets",
     "multimodal_resize",
-    "orders_with_returns_by_priority",
     "pipeline_bottomk_per_source",
     "streaming_embedding_dims_epochs",
     "part_supplier_variety",
@@ -233,9 +220,9 @@ FAMILY_EVICT_HOOKS.append(_retire_plans_for_family_evict)
 #     their family so every call re-makes the route/ledger decision).
 PREPARED_PLANS = frozenset({
     "abi_decode_transfers", "address_flow_setops", "approx_uniq_tolerance",
-    "asof_signup_attribution", "brands_never_discounted",
-    "bulk_part_suppliers", "cheapest_supplier_per_part",
-    "contamination_neardup", "contamination_ngram_overlap",
+    "asof_signup_attribution", "bulk_part_suppliers",
+    "cheapest_supplier_per_part", "contamination_neardup",
+    "contamination_ngram_overlap",
     "customer_order_distribution", "dedup_block_exact", "dedup_containment",
     "dedup_embedding_cosine", "dedup_embedding_lsh",
     "dedup_embedding_lsh_banded", "dedup_embedding_lsh_recall",
@@ -244,10 +231,8 @@ PREPARED_PLANS = frozenset({
     "dedup_semantic", "dedup_simhash", "dedup_simhash_hamming",
     "dedup_source_overlap", "disjunctive_promo_revenue", "embedding_dim_stats",
     "embedding_gram_matrix", "embedding_label_centroids", "entity_by_id",
-    "events_audience_overlap", "events_funnel_depth", "events_json_daily",
-    "events_k_entropy", "events_props_json_stats", "events_retention_cohorts",
-    "events_running_user_stats", "events_sequence_count",
-    "events_sequence_match", "events_sessionization", "events_top_transitions",
+    "events_json_daily", "events_k_entropy", "events_props_json_stats",
+    "events_running_user_stats", "events_sessionization",
     "events_type_pivot", "events_value_k_regression", "events_value_outliers",
     "events_value_quantiles", "idle_rich_customers", "late_order_priorities",
     "late_sole_supplier", "market_share_by_year", "monitoring_global_stats",
@@ -257,8 +242,7 @@ PREPARED_PLANS = frozenset({
     "mv_top_addresses", "mv_tx_size_distribution", "mv_usdc_daily_block",
     "mv_usdc_hourly_block", "mv_usdc_hourly_block_approx",
     "mv_volume_rollup_subtotals", "nation_trade_flows",
-    "orders_brand_basket_lift", "orders_rfm_segments",
-    "orders_with_returns_by_priority", "part_supplier_variety",
+    "orders_brand_basket_lift", "part_supplier_variety",
     "pipeline_blocklist_scrub", "pipeline_bottomk_per_source",
     "pipeline_bottomk_sample", "pipeline_clean_corpus", "pipeline_curate_topn",
     "pipeline_domain_mix", "pipeline_dsir_sample", "pipeline_end_to_end",
@@ -279,9 +263,9 @@ PREPARED_PLANS = frozenset({
     "text_tfidf_topk", "text_token_count", "text_unigram_logppl",
     "text_vocab_coverage", "text_vocab_topk", "text_weighted_length_quantiles",
     "tiered_union_stats", "top_customers_per_nation", "top_revenue_supplier",
-    "tpch_q18_large_orders", "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "transfers_pagerank3", "uniq_hll_merge_rollup",
+    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier_volume", "transfers_pagerank3",
+    "uniq_hll_merge_rollup",
 })
 
 

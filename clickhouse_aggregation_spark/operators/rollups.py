@@ -42,8 +42,9 @@ def live(t: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# rollup transforms (used by batch queries here AND by the streaming
-# maintainers in streaming/maintainer.py — single definition each)
+# rollup transforms (used by the batch queries here and in queries.py;
+# the streaming maintainer in streaming/maintainer.py keeps its own
+# signed partials, which subtract reorg retractions these filter out)
 
 
 def mv_usdc_daily_block(t: DataFrame) -> DataFrame:
@@ -204,18 +205,6 @@ def mv_top_addresses(t: DataFrame) -> DataFrame:
     cols = ["address", "address_type", "volume", "tx_count", "day"]
     return sent.select(*cols).unionByName(received.select(*cols))
 
-
-# every batch rollup keyed by name — the streaming maintainer reuses this
-ROLLUPS: dict[str, callable] = {
-    "mv_usdc_daily_block": mv_usdc_daily_block,
-    "mv_usdc_hourly_block": mv_usdc_hourly_block,
-    "mv_top_senders": mv_top_senders,
-    "mv_top_receivers": mv_top_receivers,
-    "mv_tx_size_distribution": mv_tx_size_distribution,
-    "mv_usdc_daily_ts": mv_usdc_daily_ts,
-    "mv_usdc_hourly_ts": mv_usdc_hourly_ts,
-    "mv_top_addresses": mv_top_addresses,
-}
 
 # ---------------------------------------------------------------------------
 # registry entries (declared queries with DuckDB oracles)

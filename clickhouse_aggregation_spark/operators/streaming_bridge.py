@@ -90,9 +90,10 @@ def distinct_key_count(ddir: str, key_col: str) -> int:
 # one maintained store per (maintainer, session, sf_dir): the stream
 # runs once; repeated invocations (driver row-count + value passes,
 # bench repeats) read the persisted store. Values are store PATHS
-# under a private temp root that also holds the chunked source —
-# eviction drops the whole root (same teardown clear_plan_caches
-# does), and a re-run re-drives the stream deterministically.
+# under a private temp root (the chunked source lives apart, in
+# _CHUNK_CACHE) — eviction drops the whole root (same teardown
+# clear_plan_caches does), and a re-run re-drives the stream
+# deterministically.
 #
 # Capacity is DEDICATED, not the family default: there are exactly 8
 # maintainer kinds per (session, sf_dir), so the default capacity of 8
@@ -237,10 +238,11 @@ def _write_chunked_table(spark: SparkSession, sf_dir: str, prefix: str,
 
 
 def _maintainer_specs() -> dict[str, dict]:
-    """Every maintainer kind the engine can back-fill, keyed exactly
-    like the facades call ``_maintained_store`` — the registry behind
-    the concurrent first-touch back-fill below. Imports are lazy (same
-    cycle-avoidance as the facades' inline imports)."""
+    """Every maintainer kind a facade can ask ``_maintained_store``
+    for: the runner that drives it and the source it is chunked from
+    (``table``/``id_col``/``df_fn``, default documents by doc_id). The
+    concurrent first-touch back-fill below drives them all. Imports are
+    lazy (same cycle-avoidance as the facades' inline imports)."""
     from ..sources.transfers import transfers_df
     from ..streaming.ann_index import run_ann_index_stream
     from ..streaming.contamination import run_contamination_stream
@@ -293,11 +295,11 @@ def _drive_store(spark: SparkSession, kind: str, ddir: str,
     conf only, so runtime-set confs like nanosAsLong would otherwise
     be lost under the driver's conf-less session).
 
-    Width policy unchanged from the serial path: derived from the
-    per-epoch batch size (see stream_shuffle_width); STATEFUL runners
-    (applyInPandasWithState) additionally cap at the grouping key's
-    cardinality — each micro-batch loads and commits one state store
-    PER PARTITION regardless of data (measured at sf0.5: rows-derived
+    Width policy: derived from the per-epoch batch size (see
+    stream_shuffle_width); STATEFUL runners (applyInPandasWithState)
+    additionally cap at the grouping key's cardinality — each
+    micro-batch loads and commits one state store PER PARTITION
+    regardless of data (measured at sf0.5: rows-derived
     width 32 drove 1.9x slower than the key-bound width). The
     cardinality read is DRIVER-LOCAL (pyarrow over the chunk files
     this process wrote). Every maintained result is width-invariant
@@ -339,8 +341,8 @@ def _backfill_stores(spark: SparkSession, sf_dir: str) -> dict:
     runners, same widths, one drive per kind — only WHEN the drives
     run moves (all inside the first facade touch instead of spread
     across eight). Returns {kind: exception} for failed drives;
-    failed kinds stay uncached and retry serially on their own facade
-    call."""
+    failed kinds stay uncached, so the next facade call back-fills them
+    again."""
     specs = _maintainer_specs()
     app = spark.sparkContext.applicationId
     missing = []
@@ -373,16 +375,15 @@ def _backfill_stores(spark: SparkSession, sf_dir: str) -> dict:
             try:
                 _STORE_CACHE[(kind, app, sf_dir)] = fut.result()
             except Exception as exc:   # noqa: BLE001 — surfaced below
-                _LOG.warning("stream back-fill for %s failed (%s); its "
-                             "facade will re-drive serially", kind, exc)
+                _LOG.warning("stream back-fill for %s failed (%s); the "
+                             "next facade call re-drives it", kind, exc)
                 errors[kind] = exc
     return errors
 
 
-def _maintained_store(spark: SparkSession, sf_dir: str, kind: str,
-                      runner, table: str = "documents",
-                      id_col: str = "doc_id", df_fn=None,
-                      stateful_key_col: str | None = None) -> str:
+def _maintained_store(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """The store path of maintainer ``kind`` (a ``_maintainer_specs``
+    key) for (session, sf_dir), driving it on first touch."""
     # applicationId (not id(spark)): a recycled Python object id can
     # never alias a stale store dir from a garbage-collected session.
     key = (kind, spark.sparkContext.applicationId, sf_dir)
@@ -393,24 +394,16 @@ def _maintained_store(spark: SparkSession, sf_dir: str, kind: str,
         # path whose files are gone (ADVICE r8)
         _STORE_CACHE.pop(key, None)
     if key not in _STORE_CACHE:
-        if kind in _maintainer_specs():
-            # first touch back-fills EVERY missing maintainer store
-            # for this (session, sf_dir) concurrently — see
-            # _backfill_stores. The lock is belt-and-braces: the
-            # engine drives queries serially, but a second caller
-            # during a back-fill must wait, not double-drive.
-            with _BACKFILL_LOCK:
+        # first touch back-fills EVERY missing maintainer store for
+        # this (session, sf_dir) concurrently — see _backfill_stores.
+        # The lock is belt-and-braces: the engine drives queries
+        # serially, but a second caller during a back-fill must wait,
+        # not double-drive.
+        with _BACKFILL_LOCK:
+            if key not in _STORE_CACHE:
+                errors = _backfill_stores(spark, sf_dir)
                 if key not in _STORE_CACHE:
-                    errors = _backfill_stores(spark, sf_dir)
-                    if key not in _STORE_CACHE:
-                        raise errors[kind]
-        else:
-            # unknown kind (future maintainer not yet in the spec
-            # registry): the original serial drive, parent-conf width
-            _, ddir, n_rows = _chunked_table_dir(
-                spark, sf_dir, f"stream_{kind}_", table, id_col, df_fn)
-            _STORE_CACHE[key] = _drive_store(
-                spark, kind, ddir, n_rows, runner, stateful_key_col)
+                    raise errors[kind]
     return _STORE_CACHE[key]
 
 
@@ -427,8 +420,8 @@ def _maintained_store(spark: SparkSession, sf_dir: str, kind: str,
     tags=("streaming",),
 )
 def q_streaming_neardup_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.neardup import read_dup_pairs, run_neardup_stream
-    store = _maintained_store(spark, sf_dir, "neardup", run_neardup_stream)
+    from ..streaming.neardup import read_dup_pairs
+    store = _maintained_store(spark, sf_dir, "neardup")
     return read_dup_pairs(spark, store).select("doc_a", "doc_b", "jaccard")
 
 
@@ -444,9 +437,8 @@ def q_streaming_neardup_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_contamination_epochs(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    from ..streaming.contamination import read_flags, run_contamination_stream
-    store = _maintained_store(spark, sf_dir, "contamination",
-                              run_contamination_stream)
+    from ..streaming.contamination import read_flags
+    store = _maintained_store(spark, sf_dir, "contamination")
     flags = read_flags(spark, store)
     sources = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("train_doc"),
@@ -470,10 +462,8 @@ def q_streaming_contamination_epochs(spark: SparkSession,
 )
 def q_streaming_corpus_tokens_epochs(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    from ..streaming.corpus_rollups import (CORPUS_ROLLUPS,
-                                            run_corpus_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "corpus_rollups",
-                              run_corpus_rollup_stream)
+    from ..streaming.corpus_rollups import CORPUS_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "corpus_rollups")
     roll = next(r for r in CORPUS_ROLLUPS if r.name == "source_tokens")
     return roll.read(spark, store)
 
@@ -507,10 +497,8 @@ FROM q GROUP BY source""",
 )
 def q_streaming_quality_envelope_epochs(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
-    from ..streaming.corpus_rollups import (CORPUS_ROLLUPS,
-                                            run_corpus_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "corpus_rollups",
-                              run_corpus_rollup_stream)
+    from ..streaming.corpus_rollups import CORPUS_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "corpus_rollups")
     roll = next(r for r in CORPUS_ROLLUPS if r.name == "quality_envelope")
     return roll.read(spark, store)
 
@@ -530,10 +518,8 @@ SELECT pair, pair_count FROM bpe_pairs""",
 )
 def q_streaming_bpe_pairs_epochs(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    from ..streaming.corpus_rollups import (CORPUS_ROLLUPS,
-                                            run_corpus_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "corpus_rollups",
-                              run_corpus_rollup_stream)
+    from ..streaming.corpus_rollups import CORPUS_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "corpus_rollups")
     roll = next(r for r in CORPUS_ROLLUPS if r.name == "bpe_pairs")
     return roll.read(spark, store)
 
@@ -561,10 +547,8 @@ FROM ({{decode_oracle}}) GROUP BY kind""".replace(
 )
 def q_streaming_media_stats_epochs(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    from ..streaming.corpus_rollups import (CORPUS_ROLLUPS,
-                                            run_corpus_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "corpus_rollups",
-                              run_corpus_rollup_stream)
+    from ..streaming.corpus_rollups import CORPUS_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "corpus_rollups")
     roll = next(r for r in CORPUS_ROLLUPS if r.name == "media_stats")
     return roll.read(spark, store)
 
@@ -601,12 +585,8 @@ GROUP BY 1, 2, 3"""
 )
 def q_streaming_mv_daily_epochs(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    from ..sources.transfers import transfers_df
-    from ..streaming.maintainer import (INCREMENTAL_ROLLUPS,
-                                        run_maintainer_stream)
-    store = _maintained_store(spark, sf_dir, "mv_maintainer",
-                              run_maintainer_stream,
-                              id_col="block_number", df_fn=transfers_df)
+    from ..streaming.maintainer import INCREMENTAL_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "mv_maintainer")
     roll = next(r for r in INCREMENTAL_ROLLUPS if r.name == "daily")
     return roll.read(spark, store)
 
@@ -624,10 +604,8 @@ def q_streaming_mv_daily_epochs(spark: SparkSession,
 )
 def q_streaming_corpus_tokens_compacted(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
-    from ..streaming.corpus_rollups import (CORPUS_ROLLUPS,
-                                            run_corpus_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "corpus_rollups",
-                              run_corpus_rollup_stream)
+    from ..streaming.corpus_rollups import CORPUS_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "corpus_rollups")
     roll = next(r for r in CORPUS_ROLLUPS if r.name == "source_tokens")
     roll.compact(spark, store)
     return roll.read(spark, store)
@@ -648,11 +626,8 @@ def q_streaming_corpus_tokens_compacted(spark: SparkSession,
 )
 def q_streaming_embedding_gram_epochs(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    from ..streaming.embedding_rollups import (EMBEDDING_ROLLUPS,
-                                               run_embedding_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "embedding_rollups",
-                              run_embedding_rollup_stream,
-                              table="embeddings", id_col="vec_id")
+    from ..streaming.embedding_rollups import EMBEDDING_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "embedding_rollups")
     roll = next(r for r in EMBEDDING_ROLLUPS if r.name == "gram")
     return roll.read(spark, store)
 
@@ -669,11 +644,8 @@ def q_streaming_embedding_gram_epochs(spark: SparkSession,
 )
 def q_streaming_embedding_dims_epochs(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    from ..streaming.embedding_rollups import (EMBEDDING_ROLLUPS,
-                                               run_embedding_rollup_stream)
-    store = _maintained_store(spark, sf_dir, "embedding_rollups",
-                              run_embedding_rollup_stream,
-                              table="embeddings", id_col="vec_id")
+    from ..streaming.embedding_rollups import EMBEDDING_ROLLUPS
+    store = _maintained_store(spark, sf_dir, "embedding_rollups")
     roll = next(r for r in EMBEDDING_ROLLUPS if r.name == "dim_stats")
     return roll.read(spark, store)
 
@@ -724,9 +696,7 @@ FROM picked GROUP BY 1, 2""",
 def q_streaming_quantile_sketch_epochs(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
     from ..streaming.quantile_sketch import PCTS
-    store = _maintained_store(spark, sf_dir, "qsketch", _run_qsketch,
-                              table="events", id_col="event_id",
-                              stateful_key_col="event_type")
+    store = _maintained_store(spark, sf_dir, "qsketch")
     est = spark.read.parquet(os.path.join(store, "out"))
     latest = est.groupBy("event_type").agg(F.max("n").alias("n"))
     return (est.join(latest, ["event_type", "n"])
@@ -744,11 +714,8 @@ def q_streaming_quantile_sketch_epochs(spark: SparkSession,
 )
 def q_streaming_embedding_neardup_epochs(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
-    from ..streaming.embedding_neardup import (read_dup_pairs as _read_vec_pairs,
-                                               run_embedding_neardup_stream)
-    store = _maintained_store(spark, sf_dir, "emb_neardup",
-                              run_embedding_neardup_stream,
-                              table="embeddings", id_col="vec_id")
+    from ..streaming.embedding_neardup import read_dup_pairs as _read_vec_pairs
+    store = _maintained_store(spark, sf_dir, "emb_neardup")
     return _read_vec_pairs(spark, store).select("vec_a", "vec_b", "cosine")
 
 
@@ -770,10 +737,8 @@ def q_streaming_ivf_search_epochs(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     from ..operators.similarity import (N_CENTROIDS, N_PROBE, N_QUERIES,
                                         int_dot, ivf_search)
-    from ..streaming.ann_index import read_cells, run_ann_index_stream
-    store = _maintained_store(spark, sf_dir, "ann_index",
-                              run_ann_index_stream,
-                              table="embeddings", id_col="vec_id")
+    from ..streaming.ann_index import read_cells
+    store = _maintained_store(spark, sf_dir, "ann_index")
     cells = read_cells(spark, store)     # vec_id, centroid_id, qv, norm2
     cents = (cells.filter(F.col("vec_id") < N_CENTROIDS)
              .select(F.col("vec_id").alias("centroid_id"),

@@ -1,6 +1,6 @@
 """The remaining classic TPC-H query *shapes*, adapted to the driver's
 reduced star schema (no partsupp, no commit/receipt dates, no phone) —
-rounding out the join/subquery surface beyond `tpch.py`/`tpch_more.py`:
+rounding out the join/subquery surface beyond `tpch.py`:
 
   Q2  correlated-min subquery (decorrelated: aggregate + join-back)
   Q7  bi-directional nation trade flows (two dim roles for one table)

@@ -123,19 +123,18 @@ def test_store_cache_revalidates_missing_dir(spark, tmp_path, monkeypatch):
         return _Q()
 
     monkeypatch.setattr(sb, "_chunked_table_dir", fake_chunked)
+    monkeypatch.setattr(sb, "_maintainer_specs",
+                        lambda: {"revalidate_test": dict(runner=fake_runner)})
     key_sf = str(tmp_path / "sfX")
-    store1 = sb._maintained_store(spark, key_sf, "revalidate_test",
-                                  fake_runner)
+    store1 = sb._maintained_store(spark, key_sf, "revalidate_test")
     assert os.path.isdir(store1) and len(calls) == 1
     # warm hit: no re-drive
-    assert sb._maintained_store(spark, key_sf, "revalidate_test",
-                                fake_runner) == store1
+    assert sb._maintained_store(spark, key_sf, "revalidate_test") == store1
     assert len(calls) == 1
     # out-of-band removal -> the hit must re-drive
     import shutil
     shutil.rmtree(os.path.dirname(store1))
-    store2 = sb._maintained_store(spark, key_sf, "revalidate_test",
-                                  fake_runner)
+    store2 = sb._maintained_store(spark, key_sf, "revalidate_test")
     assert os.path.isdir(store2) and len(calls) == 2
     sb._STORE_CACHE.pop(
         ("revalidate_test", spark.sparkContext.applicationId, key_sf), None)
@@ -175,6 +174,6 @@ def test_chunk_dir_shared_across_maintainer_kinds(spark):
     r3 = sb._chunked_table_dir(spark, sf, "stream_kind_a_",
                                "embeddings", "vec_id")
     assert r3[1] != r1[1] and os.path.isdir(r3[1]) and r3[2] == r1[2]
-    sb._CHUNK_CACHE.pop(
-        (spark.sparkContext.applicationId, "embeddings", sf), None)
+    assert sb._CHUNK_CACHE.pop(
+        sb.chunk_cache_key(spark, "embeddings", "vec_id", sf), None) == r3
     shutil.rmtree(r3[0], ignore_errors=True)

@@ -281,17 +281,6 @@ def test_repetition_stats_two_combinable_aggregates(spark, sf_dir):
     assert "partial" in plan.lower()
 
 
-def test_sequence_match_prefilters_before_user_shuffle(spark, sf_dir):
-    """Only qualified (props.k < 10) events may reach the per-user
-    fold: the JSON filter must sit below the aggregate, and the fold
-    itself is a higher-order expression — no Python UDF."""
-    plan = _plan(spark, sf_dir, "events_sequence_match")
-    assert "get_json_object" in plan
-    assert "aggregate(" in plan          # the HOF fold, JVM-side
-    assert "BatchEvalPython" not in plan
-    assert "mapInPandas" not in plan and "MapInPandas" not in plan
-
-
 def test_value_outliers_broadcasts_stats(spark, sf_dir):
     """The 5-row per-type stats frame joins back over the scan as a
     broadcast — shuffling the events by type (5 keys!) would be a
@@ -429,34 +418,6 @@ def test_pagerank_iterations_equi_join_broadcast_stats(spark, sf_dir):
     assert "BatchEvalPython" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
         or "BroadcastHashJoin" in plan
-
-
-def test_audience_overlap_two_aggregates_no_join(spark, sf_dir):
-    """Bitmap set algebra must stay two combinable aggregates over
-    per-user flags — no set materialization, no join, no Python."""
-    plan = _plan(spark, sf_dir, "events_audience_overlap")
-    assert "Join" not in plan
-    assert "collect_set" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_rfm_anchor_broadcasts(spark, sf_dir):
-    """The global anchor date is one row: it must broadcast back over
-    the per-customer aggregate, never shuffle or go cartesian."""
-    plan = _plan(spark, sf_dir, "orders_rfm_segments")
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1   # the 1-row join
-    assert "Window" not in plan
-
-
-def test_sequence_count_one_user_shuffle_no_join_chain(spark, sf_dir):
-    """The automaton folds JVM-side over one user-keyed collect — no
-    per-step join chain, no Python; the only joins are the users
-    left-join of rollup-sized frames."""
-    plan = _plan(spark, sf_dir, "events_sequence_count")
-    assert "BatchEvalPython" not in plan
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") \
-        + plan.count("BroadcastHashJoin") <= 1
 
 
 def test_unigram_logppl_fold_is_aggregate_not_window(spark, sf_dir):

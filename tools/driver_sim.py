@@ -10,12 +10,13 @@ agree between the Spark and DuckDB frames.
 import math
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as mod
 
 spark = (SparkSession.builder.master("local[8]")
